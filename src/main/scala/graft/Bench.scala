@@ -34,6 +34,10 @@ import org.apache.spark.sql.SparkSession
   * contention, a tight spread says regression — so BENCH_rN separates the
   * two without a manual re-run.
   *
+  * Failures are loud: a query that throws prints its message to stderr,
+  * is named in the headline's `"failed"` list, and is left out of
+  * `"n_measured"`, the number of queries the total sums.
+  *
   * Optional args name specific queries (local iteration); the driver runs
   * with no args = the full declared suite.
   */
@@ -84,6 +88,8 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
+    // queries that threw in any pass, warm-up included
+    val failed = collection.mutable.LinkedHashSet[String]()
     def materialize(name: String): Double = {
       val dt =
         try {
@@ -91,7 +97,11 @@ object Bench {
           SparkEntry.queries(name)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
           (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          failed += name
+          -1.0
+        }
       spark.catalog.clearCache() // drop per-query cached subframes, untimed
       dt
     }
@@ -100,7 +110,7 @@ object Bench {
       if (args.nonEmpty) args.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
     val ledger = loadLedger()
-    names.headOption.foreach(materialize) // warmup: JIT + parquet footer IO
+    names.headOption.foreach(materialize) // warmup: JIT + footer check
 
     // two interleaved passes over the full suite
     val passes = collection.mutable.Map[String, List[Double]]()
@@ -133,11 +143,14 @@ object Bench {
       val ps = passes(n).mkString("[", ",", "]")
       s""""$n":{"entry":$e,"band":${band(e)},"passes":$ps}"""
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val measured = results.map(_._2).filter(_ >= 0)
+    val total = measured.sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""sf":"$sfDir","retried":$retriedJson,""" +
-        s""""load_suspect":$suspectJson}"""
+        s""""load_suspect":$suspectJson,"n_measured":${measured.size},""" +
+        s""""failed":$failedJson}"""
     // Default output path is stamped with the core count and wall-clock
     // so successive runs (the driver benches at two core counts) can't
     // overwrite each other's full per-query map — round 12 lost the

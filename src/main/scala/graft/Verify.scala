@@ -2,7 +2,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB differential compare
+  * (`tools/check.py`, `tools/check_pandas.py`). A query that
+  * throws is reported on stderr as it fails, and the run ends with one
+  * summary line giving the count and names of the failed queries. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -17,13 +20,15 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val failed = collection.mutable.ArrayBuffer[String]()
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        failed += name
       }
       // queries that cache shared subframes (LSH banded, prepareCorpus
       // exact-dedup) leave those plans pinned; across ~100 queries the
@@ -65,5 +70,7 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    System.err.println(s"[verify] ${failed.size} of ${selected.size} " +
+      s"queries failed: ${failed.sorted.mkString("[", ", ", "]")}")
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Round-7 analytics surface: statistical profiling (correlation matrix),
   * mergeable cardinality sketches (KMV), sequence-pattern mining, graph
@@ -14,9 +14,6 @@ import graft.sources.Tables
   * wherever a float fold would diverge across engines).
   */
 object Analytics {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Exact decimal(38,0) sum — the order-independent carrier for sums of
     * integer products that overflow BIGINT (price-cents² sums reach ~6e19

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** The reference's demonstrated capability surface (SURVEY.md §2.1),
   * re-expressed Spark-first over the driver's TPC-H-ish testdata. The HR
@@ -20,9 +20,6 @@ import graft.sources.Tables
   * parquet scan.
   */
 object Core {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // S1/S2 — JDBC full scan (reference README.md:462-467, 549-558).
   // Parquet binding; the stride-partitioned variant (S2) is content-identical

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Training-data curation planners and sketches (round 11): the
   * register-exact HyperLogLog census (q496, with its streaming twin
@@ -20,9 +20,6 @@ import graft.sources.Tables
   * none appear here — the q403/q386 lesson applied at design time).
   */
 object Curation {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ---------------------------------------------------------------- q496
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash._
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Near-duplicate detection suite for LLM-data pipelines (north star):
   * MinHash+LSH, SimHash, n-gram Jaccard, and embedding-cosine near-dup.
@@ -99,9 +99,6 @@ object Dedup {
 
   /** The default-geometry planes (what every declared query uses). */
   val planes: Array[Array[Double]] = planesFor(NumPlanes)
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ---------------------------------------------------------------- text
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** North-star extension surface (SURVEY.md §2.3): the operators a
   * large-scale data pipeline needs beyond the reference's transcripts,
@@ -16,9 +17,6 @@ import graft.sources.Tables
   * sides, identical fold order).
   */
 object Extensions {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // q20 — hash aggregate with partial (map-side) + final aggregation, the
   // generalization of the reference's count() checks (README.md:596-597).

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Iterative graph analytics beyond connected components: PageRank by
   * power iteration (reference analog: the entity-importance ranking a
@@ -24,9 +24,6 @@ import graft.sources.Tables
   * where float PageRank would drift by summation order.
   */
 object Graph {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Fixed-point scale: rank 1.0 ≡ 10⁶. */
   val PrScale = 1000000L

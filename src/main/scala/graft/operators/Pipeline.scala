@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.GraftFunctions
 import graft.functions.PortableHash._
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Training-data pipeline operators beyond the dedup/similarity families
   * (north star: what a 100 TB corpus-preparation job needs around the
@@ -28,9 +28,6 @@ import graft.sources.Tables
   *    themselves are not cross-engine comparable, their error bounds are.
   */
 object Pipeline {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ------------------------------------------------------------ q62
 

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** TPC-H join-shape portfolio COMPLETION (q370–q380): with the eleven
   * shapes already declared (Q1 = q20, Q3 = q328/q107, Q5 = q311, Q7 =
@@ -20,9 +20,6 @@ import graft.sources.Tables
   * build sides, one fact scan wherever the shape allows.
   */
 object Portfolio {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ------------------------------------------------------------ q370
 

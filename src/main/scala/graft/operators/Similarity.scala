@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions.{register, vec_dot}
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Approximate-nearest-neighbor search over the embeddings column.
   *
@@ -30,9 +30,6 @@ object Similarity {
 
   val NumCentroids = 16
   val TopK = 10
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Embeddings with double-cast vectors and precomputed norms. */
   private[graft] def vectors(s: SparkSession, dir: String): DataFrame = {

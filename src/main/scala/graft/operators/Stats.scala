@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Round-9 statistics + entity-resolution surface: rank-based two-sample
   * testing (Mann–Whitney), time-series autocorrelation, the TPC-H Q8-style
@@ -15,9 +15,6 @@ import graft.sources.Tables
   * expressions over exact integer operands, per the q242/q266 discipline).
   */
 object Stats {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   // ------------------------------------------------------------ q303
 

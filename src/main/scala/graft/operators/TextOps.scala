@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableHash._
-import graft.sources.Tables
+import graft.sources.Tables.{load => t}
 
 /** Text-analysis operators for training-data pipelines (north star):
   * language ID, quality scoring, token counting, document fingerprinting.
@@ -16,9 +16,6 @@ import graft.sources.Tables
   * aggregate where one exists; at 100 TB these run at scan speed.
   */
 object TextOps {
-
-  private def t(s: SparkSession, dir: String, n: String): DataFrame =
-    Tables.load(s, dir, n)
 
   /** Tiny per-language stopword profiles (n-gram-heuristic stand-in; a
     * production profile would be the top-k character n-grams per language,
@@ -185,7 +182,7 @@ object TextOps {
   /** q61 — ordered string aggregation (LISTAGG family): comma-joined
     * sorted member names per nation-of-customers sample. */
   def q61StringAgg(s: SparkSession, dir: String): DataFrame =
-    Tables.load(s, dir, "customer")
+    t(s, dir, "customer")
       .filter(col("c_custkey") < 40L)
       .groupBy("c_nationkey")
       .agg(concat_ws(",",

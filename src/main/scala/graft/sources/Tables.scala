@@ -1,8 +1,15 @@
 package graft.sources
 
 import java.util.Locale
+import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path, RemoteIterator}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{DataType, LongType, StructType, TimestampNTZType, TimestampType}
 
 
 /** Source stage: parquet binding for the engine's pluggable source model.
@@ -17,6 +24,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * We normalize to lower-case once, here, so every downstream operator can
   * assume lower_snake names.
   *
+  * Schemas are DECLARED, not inferred — the parquet analog of the JDBC
+  * source taking its schema from Oracle's catalog (reference
+  * README.md:480-493), which never reads table data. Every table is read
+  * with `spark.read.schema(declared)`, so no load runs Spark's one-task
+  * footer-inference job. Each table file's footer is still checked
+  * against the declaration, but once per file identity (qualified path,
+  * length, modification time): a rewritten file has a new identity and
+  * is checked again. A mismatch fails the load with a
+  * [[SourceSchemaMismatch]] naming the table, column, declared type and
+  * found type. Only this schema metadata is kept; no data or query
+  * result is cached.
+  *
   * Scale note: `spark.read.parquet` is already a distributed, partitioned,
   * vectorized, predicate-pushdown-capable scan — the parquet analog of the
   * reference's stride-partitioned JDBC read (README.md:549-558). Filters and
@@ -26,10 +45,43 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Tables {
 
+  /** Declared column types per table (FIXTURES.md), in file column order. */
+  private val declaredDdl: Seq[(String, String)] = Seq(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" ->
+      "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, " +
+      "p_type STRING, p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, " +
+      "o_orderstatus STRING, o_totalprice DOUBLE, " +
+      "o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "documents" -> ("doc_id BIGINT, text STRING, lang STRING, " +
+      "source STRING, n_chars BIGINT"),
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+    "events" -> ("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT, " +
+      "event_type STRING, value DOUBLE, props STRING"))
+
   /** All driver-generated tables (FIXTURES.md). */
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "documents", "embeddings", "events")
+  val names: Seq[String] = declaredDdl.map(_._1)
+
+  /** The declared schema of each table. */
+  val declared: Map[String, StructType] =
+    declaredDdl.map { case (n, ddl) => n -> StructType.fromDDL(ddl) }.toMap
+
+  /** Encodings a file may carry for a column instead of its declared type.
+    * `events.ts` has changed between testdata generations: parquet
+    * TIMESTAMP(NANOS), read as LONG through `nanosAsLong`; plain micros
+    * TIMESTAMP_NTZ; and zoned TIMESTAMP when Spark wrote the file. The
+    * check records which one the file has, and the load reads it so. */
+  private val alternatives: Map[(String, String), Set[DataType]] = Map(
+    ("events", "ts") -> Set(LongType, TimestampNTZType, TimestampType))
 
   /** Primary-key columns per table (FIXTURES.md). The reference's JDBC
     * source infers `nullable = false` exactly where Oracle declared NOT
@@ -49,34 +101,138 @@ object Tables {
     "embeddings" -> Seq("vec_id"),
     "events" -> Seq("event_id"))
 
-  /** Load one table from an sf directory, lower-casing column names and
-    * re-asserting key non-nullability at the relation (the JDBC-metadata
-    * inference of reference README.md:480-493, re-applied over parquet —
-    * see [[org.apache.spark.sql.GraftSqlBridge.withNonNullableColumns]]).
+  /** Load one table from an sf directory with its declared schema,
+    * lower-casing column names and re-asserting key non-nullability at
+    * the relation (the JDBC-metadata inference of reference
+    * README.md:480-493, re-applied over parquet — see
+    * [[org.apache.spark.sql.GraftSqlBridge.withNonNullableColumns]]).
     * Nullability is applied to the bare relation FIRST so the rename /
     * timestamp projects built on top reference the non-nullable
     * attributes and propagate the flag to the final schema. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    if (name == "events")
-      // Some testdata generations encode events.ts as parquet
-      // TIMESTAMP(NANOS), which Spark 4 refuses outright
-      // (PARQUET_TYPE_ILLEGAL) unless nanos are surfaced as raw longs.
-      // The flag is a no-op for micros/NTZ encodings, so set it
-      // unconditionally and branch on what the scan actually yields.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = applyKeyNullability(
-      name, spark.read.parquet(s"$sfDir/$name.parquet"))
+    val raw = applyKeyNullability(name, spark.read
+      .schema(readSchema(spark, sfDir, name))
+      .parquet(s"$sfDir/$name.parquet"))
     val df =
       if (name == "events") normalizeEventTs(raw)
       else raw
     normalize(df)
   }
 
+  /** The schema to read table `name` under `sfDir` with: its declared
+    * schema, with each column that has [[alternatives]] at the encoding
+    * the file was found to carry. A TIMESTAMP(NANOS) `events.ts` (found
+    * as LONG) reads only with `nanosAsLong`, which Spark 4 otherwise
+    * refuses (PARQUET_TYPE_ILLEGAL), so the flag is set on the session
+    * for exactly that encoding and no other. */
+  private[graft] def readSchema(
+      spark: SparkSession, sfDir: String, name: String): StructType = {
+    val schema = checkedSchema(spark, s"$sfDir/$name.parquet", name)
+    if (name == "events" && schema("ts").dataType == LongType)
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema
+  }
+
+  /** A file's identity: qualified path, length, modification time. */
+  private type FileId = (String, Long, Long)
+
+  /** Read schema per (table, qualified path), with the identities of the
+    * files it was checked against. */
+  private val checked =
+    new ConcurrentHashMap[(String, String), (Seq[FileId], StructType)]()
+
+  /** Footer-to-Spark type conversion as Spark's own inference does it,
+    * except that TIMESTAMP(NANOS) surfaces as LONG instead of failing, so
+    * the check can see that encoding without touching the session. */
+  private lazy val footerConverter =
+    new ParquetToSparkSchemaConverter(nanosAsLong = true)
+
+  private def checkedSchema(
+      spark: SparkSession, path: String, name: String): StructType = {
+    val declaredSchema = declared.getOrElse(name, throw new
+        IllegalArgumentException(s"no declared schema for table '$name'"))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val key = (name, fs.makeQualified(p).toString)
+    val files = dataFiles(fs.listFiles(p, true))
+    val identity: Seq[FileId] = files.map(f =>
+      (f.getPath.toString, f.getLen, f.getModificationTime))
+    Option(checked.get(key)).collect { case (`identity`, s) => s }
+      .getOrElse {
+        val read = files.map(f =>
+          conform(name, declaredSchema, footerSchema(conf, f), f)).distinct
+        read.drop(1).headOption.foreach { other =>
+          // two files of one table carry different alternative encodings
+          val (a, b) = read.head.fields.zip(other.fields)
+            .find { case (x, y) => x.dataType != y.dataType }.get
+          throw new SourceSchemaMismatch(name, a.name, typeName(a.dataType),
+            s"${typeName(b.dataType)} in another file", path)
+        }
+        // an empty table directory reads as an empty declared table
+        val schema = read.headOption.getOrElse(declaredSchema)
+        checked.put(key, (identity, schema))
+        schema
+      }
+  }
+
+  /** The visible data files under a table path (the path itself when it
+    * is a single file), sorted by path. */
+  private def dataFiles(
+      it: RemoteIterator[_ <: FileStatus]): Seq[FileStatus] = {
+    val b = Seq.newBuilder[FileStatus]
+    while (it.hasNext) {
+      val f = it.next()
+      val n = f.getPath.getName
+      if (!n.startsWith("_") && !n.startsWith(".")) b += f
+    }
+    b.result().sortBy(_.getPath.toString)
+  }
+
+  private def footerSchema(conf: Configuration, f: FileStatus): StructType = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new Footer(f.getPath, footer), footerConverter)
+  }
+
+  /** Check one file's footer schema against the declared one — names and
+    * order exactly (case-insensitive, like the read), every type equal
+    * up to nullability, except where [[alternatives]] allows another
+    * encoding — and return the schema to read that file with. */
+  private def conform(table: String, declaredSchema: StructType,
+      found: StructType, file: FileStatus): StructType = {
+    def fail(column: String, declaredType: String, foundType: String): Nothing =
+      throw new SourceSchemaMismatch(
+        table, column, declaredType, foundType, file.getPath.toString)
+    val foundNames =
+      found.fieldNames.toSeq.map(_.toLowerCase(Locale.ROOT))
+    declaredSchema.fields.find(d => !foundNames.contains(d.name))
+      .foreach(d => fail(d.name, typeName(d.dataType), "missing"))
+    found.fields.zip(foundNames)
+      .find { case (_, n) => !declaredSchema.fieldNames.contains(n) }
+      .foreach { case (f, n) => fail(n, "undeclared", typeName(f.dataType)) }
+    StructType(declaredSchema.fields.zip(found.fields).zipWithIndex.map {
+      case ((d, f), i) =>
+        if (foundNames(i) != d.name)
+          fail(d.name, s"${typeName(d.dataType)} at position $i",
+            s"position ${foundNames.indexOf(d.name)}")
+        if (typeName(f.dataType) == typeName(d.dataType)) d
+        else if (alternatives.get((table, d.name))
+            .exists(_.contains(f.dataType))) d.copy(dataType = f.dataType)
+        else fail(d.name, typeName(d.dataType), typeName(f.dataType))
+    })
+  }
+
+  /** A type as SQL names it, without nullability (`array<float>`). */
+  private def typeName(t: DataType): String = t.catalogString
+
   /** Normalize `events.ts` to session-zoned [[TimestampType]] REGARDLESS
     * of how the testdata generation encoded it — the encoding has changed
     * between generations (parquet TIMESTAMP(NANOS) vs plain micros
     * TIMESTAMP_NTZ), and every downstream operator assumes one stable
-    * type. Branches on the type the scan yields:
+    * type. Branches on the encoding the footer check recorded
+    * ([[readSchema]]), which admits only these three:
     *   - LONG (nanos surfaced via `nanosAsLong`): integer-`div` truncate
     *     to micros — a double division would lose precision above
     *     2^53 ns — then `timestamp_micros`.
@@ -89,16 +245,12 @@ object Tables {
     * the ns→µs truncation in the first branch is invisible downstream. */
   private[graft] def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       case TimestampNTZType =>
         df.withColumn("ts", col("ts").cast(TimestampType))
       case TimestampType => df
-      case other => throw new IllegalStateException(
-        s"events.ts arrived as unsupported type $other — " +
-          "extend Tables.normalizeEventTs for this testdata encoding")
     }
   }
 
@@ -180,3 +332,14 @@ final class JdbcBinding(
     Tables.normalize(
       spark.read.format("jdbc").options(readerOptions(name)).load())
 }
+
+/** A table file whose footer schema does not match the table's declared
+  * schema ([[Tables.declared]]). `found` is `missing` for a declared
+  * column the file lacks; `declared` is `undeclared` for a file column
+  * the declaration lacks. */
+final class SourceSchemaMismatch(
+    val table: String, val column: String,
+    val declared: String, val found: String, val file: String)
+  extends IllegalStateException(
+    s"table '$table' column '$column': declared $declared, " +
+      s"found $found (in $file)")

@@ -59,11 +59,6 @@ case class RateCounts(
   */
 object EventStream {
 
-  // NOTE: the stream schema is NOT hardcoded — testdata generations have
-  // switched events.ts between parquet TIMESTAMP(NANOS) and plain micros
-  // TIMESTAMP_NTZ, so readEvents derives the raw schema from a batch read
-  // of the same file and reuses Tables.normalizeEventTs for the ts branch.
-
   /** The shared batch/stream aggregation: 1-day tumbling windows per
     * event_type, count + DECIMAL-cast sum (same shape as q26). The sum is
     * accumulated in DECIMAL (order-independent) but SURFACED as DOUBLE:
@@ -82,16 +77,14 @@ object EventStream {
         col("event_type"), col("n"), col("sum_value"))
 
   /** Open the events table as a stream (file source over the sf dir).
-    * The raw schema is derived from a BATCH read of the same file —
-    * schema-adaptive like [[graft.sources.Tables.load]], so a testdata
-    * regeneration that changes the ts encoding (nanos-as-long vs micros
-    * TIMESTAMP_NTZ) changes the stream schema with it instead of
-    * silently misreading micros as nanos. */
+    * The raw schema is the `events` schema the source layer verified
+    * against the file's footer ([[graft.sources.Tables.readSchema]]), so
+    * the `ts` encoding (nanos-as-long vs micros TIMESTAMP_NTZ) is decided
+    * in one place for batch and stream reads alike. */
   def readEvents(spark: SparkSession, sfDir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val rd = spark.readStream.schema(rawSchema)
+    val rd = spark.readStream
+      .schema(graft.sources.Tables.readSchema(spark, sfDir, "events"))
     maxFilesPerTrigger.foreach(n =>
       rd.option("maxFilesPerTrigger", n.toString))
     val raw = rd

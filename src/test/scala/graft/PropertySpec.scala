@@ -46,8 +46,10 @@ class PropertySpec extends SparkSpec {
     val docs = sample(docGen, 200).zipWithIndex
       .map { case (ws, i) => (i.toLong, ws.mkString(" ")) }
     val dir = java.nio.file.Files.createTempDirectory("chunkprop")
-    docs.toDF("doc_id", "text").write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
+    docs.toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("t").as("source"), length(col("text")).cast("long").as("n_chars"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val chunks = graft.operators.TextOps
       .q89ChunkDocuments(spark, dir.toString)
       .collect()

@@ -553,8 +553,9 @@ class ScalePathSpec extends SparkSpec {
     val switch = "a" * 128 + "0" * 128 // digits land in a different bin
     val dir = java.nio.file.Files.createTempDirectory("shots")
     Seq((0L, uniform), (1L, switch)).toDF("doc_id", "text")
-      .withColumn("source", lit("t")).write.mode("overwrite")
-      .parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"),
+        lit("t").as("source"), length(col("text")).cast("long").as("n_chars"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = M.q148ShotBoundaries(spark, dir.toString).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out(0L) === 0L)

@@ -1572,9 +1572,11 @@ class StatsSpec extends SparkSpec {
     import spark.implicits._
     val dir = java.nio.file.Files
       .createTempDirectory("graft-q356-transp").toString
-    Seq("Supplier#000000012", "Supplier#000000021",
-        "Supplier#000000013")
-      .toDF("s_name").coalesce(1).write.mode("overwrite")
+    Seq((12L, "Supplier#000000012", 0, 0.0),
+        (21L, "Supplier#000000021", 0, 0.0),
+        (13L, "Supplier#000000013", 0, 0.0))
+      .toDF("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
+      .coalesce(1).write.mode("overwrite")
       .parquet(s"$dir/supplier.parquet")
     val planted = graft.operators.Analytics.q356TypoJoinDl(spark, dir)
       .collect()

@@ -1,8 +1,21 @@
 package graft
 
+import java.io.File
+import java.nio.file.{Files, Paths, StandardCopyOption}
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, TimestampType}
 
-import graft.sources.{JdbcBinding, ParquetBinding, SourceBinding, Tables}
+import graft.sources.{JdbcBinding, ParquetBinding, SourceBinding, SourceSchemaMismatch, Tables}
+import graft.streaming.EventStream
 
 /** Source-layer checks mirroring the reference's own row-count validation
   * (reference README.md:596-597, 876-877) and the lower-case normalization
@@ -73,6 +86,133 @@ class TablesSpec extends SparkSpec {
         .map(f => s"${f.name}:${f.dataType.simpleString}").toSeq
       assert(actual === cols, s"schema drift in table '$name'")
     }
+  }
+
+  // ------------------------------------------------ declared schemas
+
+  /** Write `df` as the single parquet FILE `$dir/$name.parquet`, the way
+    * the sf tables are laid out, replacing whatever file is there. */
+  private def writeTableFile(df: DataFrame, dir: String, name: String): Unit = {
+    val staging = Files.createTempDirectory("graft-staging").toString
+    df.coalesce(1).write.mode("overwrite").parquet(staging)
+    val part = new File(staging).listFiles()
+      .filter(f => f.getName.startsWith("part-")).head
+    Files.move(part.toPath, Paths.get(s"$dir/$name.parquet"),
+      StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def customer: DataFrame = Tables.load(spark, sf1, "customer")
+
+  test("a column of the wrong type fails at load, naming table, column, " +
+    "declared type and found type") {
+    val dir = Files.createTempDirectory("graft-badtype").toString
+    writeTableFile(customer
+      .withColumn("c_custkey", col("c_custkey").cast("string")),
+      dir, "customer")
+    val e = intercept[SourceSchemaMismatch] {
+      Tables.load(spark, dir, "customer")
+    }
+    assert((e.table, e.column, e.declared, e.found) ===
+      (("customer", "c_custkey", "bigint", "string")))
+    Seq("customer", "c_custkey", "bigint", "string").foreach(w =>
+      assert(e.getMessage.contains(w), e.getMessage))
+  }
+
+  test("a missing column fails at load by name") {
+    val dir = Files.createTempDirectory("graft-missing").toString
+    writeTableFile(customer.drop("c_name"), dir, "customer")
+    val e = intercept[SourceSchemaMismatch] {
+      Tables.load(spark, dir, "customer")
+    }
+    assert((e.table, e.column, e.declared, e.found) ===
+      (("customer", "c_name", "string", "missing")))
+  }
+
+  test("a file rewritten at the same path is checked again") {
+    val dir = Files.createTempDirectory("graft-rewrite").toString
+    writeTableFile(customer, dir, "customer")
+    assert(Tables.load(spark, dir, "customer").count() === 150L)
+    writeTableFile(customer
+      .withColumn("c_acctbal", col("c_acctbal").cast("string")),
+      dir, "customer")
+    val e = intercept[SourceSchemaMismatch] {
+      Tables.load(spark, dir, "customer")
+    }
+    assert((e.column, e.declared, e.found) ===
+      (("c_acctbal", "double", "string")))
+    writeTableFile(customer, dir, "customer")
+    assert(Tables.load(spark, dir, "customer").count() === 150L)
+  }
+
+  test("loading every table runs no Spark job, first check included") {
+    val dir = Files.createTempDirectory("graft-nojob").toString
+    Tables.names.foreach(n => Files.copy(
+      Paths.get(s"$sf1/$n.parquet"), Paths.get(s"$dir/$n.parquet")))
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(
+          e.properties.getProperty("spark.jobGroup.id")))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("tables-load", "loads under test")
+      Tables.names.foreach(n => Tables.load(spark, dir, n).schema)
+      Tables.names.foreach(n => Tables.load(spark, dir, n).schema)
+      // listener events arrive in order: once the marker job is seen,
+      // every job the loads started has been seen too
+      sc.setJobGroup("tables-marker", "listener-bus marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("tables-marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("tables-marker"))
+      assert(!groups.contains("tables-load"),
+        "a Tables.load ran a Spark job (schema inference?)")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("events.ts as parquet TIMESTAMP(NANOS) loads, and only that " +
+    "encoding sets nanosAsLong on the session") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    Tables.load(spark, sf1, "events").schema
+    assert(spark.conf.get(key) === "false",
+      "a micros events file must not flip nanosAsLong")
+
+    val dir = Files.createTempDirectory("graft-nanos").toString
+    val schema = Types.buildMessage()
+      .required(INT64).named("event_id")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(
+        false, LogicalTypeAnnotation.TimeUnit.NANOS)).named("ts")
+      .optional(INT64).named("user_id")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType())
+      .named("event_type")
+      .optional(DOUBLE).named("value")
+      .optional(BINARY).as(LogicalTypeAnnotation.stringType()).named("props")
+      .named("events")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/events.parquet"), conf)).withType(schema).build()
+    // 2024-01-15T10:30:00.123456789Z
+    val nanos = 1705314600123456789L
+    writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", nanos).append("user_id", 7L)
+      .append("event_type", "click").append("value", 1.5)
+      .append("props", "{\"k\": 1}"))
+    writer.close()
+
+    val events = Tables.load(spark, dir, "events")
+    assert(spark.conf.get(key) === "true")
+    assert(events.schema("ts").dataType === TimestampType)
+    assert(events.head().getAs[java.sql.Timestamp]("ts").toInstant ===
+      java.time.Instant.parse("2024-01-15T10:30:00.123456Z"))
+    assert(EventStream.readEvents(spark, dir).schema("ts").dataType ===
+      TimestampType)
   }
 
   test("customer schema keeps int64 custkey") {
