@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every declared query at
   * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line.
   *
@@ -78,15 +76,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // queries that threw in any pass, warm-up included
     val failed = collection.mutable.LinkedHashSet[String]()
@@ -161,7 +151,7 @@ object Bench {
       .format(java.time.Instant.now())
     val out = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-        s"bench_full_c${cpus}_$stamp.json"))
+        s"bench_full_c${GraftSession.cores}_$stamp.json"))
     java.nio.file.Files.write(out,
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // The headline line (the full per-query map) goes FIRST: the
@@ -173,12 +163,14 @@ object Bench {
     // parsed=null from the first-line placement alone (r09–r11 it
     // picked up the last JSON line), so the contract line now brackets
     // the per-query stream at both ends. The full map is also written
-    // to the stamped output file above.
+    // to the stamped output file above. The trailing copy carries one
+    // more key, "position":"tail", so a consumer that reads every JSON
+    // line can drop the duplicate.
     println(line)
     results.foreach { case (k, v) =>
       println(s"""{"query":"$k","sec":$v}""")
     }
-    println(line)
+    println(line.dropRight(1) + ""","position":"tail"}""")
     spark.stop()
   }
 }

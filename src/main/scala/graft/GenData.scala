@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Builder-side scale-factor extrapolator: writes an sf1-equivalent
@@ -68,14 +68,7 @@ object GenData {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("testdata_sf1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_GEN_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     import spark.implicits._
 
     val nCust = 15000L * mult

@@ -4,10 +4,12 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-import graft.functions.{DotProductD, PolyHash, SimHash32}
+import graft.functions.GraftFunctions
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * Catalyst expressions so SQL users get them too.
+/** SparkSessionExtensions entry point: injects every native function of
+  * [[GraftFunctions.table]] and the [[graft.plans.LevenshteinGuard]]
+  * optimizer rule, so SQL users of a session built with it get them from
+  * construction on.
   *
   * Usage: `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions` on a cluster.
@@ -17,17 +19,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rule: O(1) length-difference guard ahead of O(len²)
     // edit-distance filters (see graft.plans.LevenshteinGuard)
     e.injectOptimizerRule(_ => graft.plans.LevenshteinGuard)
-    e.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[DotProductD].getName, "vec_dot"),
-      exprs => DotProductD(exprs(0), exprs(1))))
-    e.injectFunction((
-      FunctionIdentifier("poly_hash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "poly_hash"),
-      exprs => PolyHash(exprs.head)))
-    e.injectFunction((
-      FunctionIdentifier("simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "simhash32"),
-      exprs => SimHash32(exprs.head)))
+    GraftFunctions.table.foreach { case (name, build) =>
+      e.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(GraftFunctions.getClass.getName, name), build))
+    }
   }
 }

@@ -60,15 +60,14 @@ object PlanLedger {
     }.mkString(" ")
   }
 
-  /** Build the session the ledger is DEFINED against. The spec uses the
-    * same builder so ledger and check can't drift on config. */
-  def session(cpus: String): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  /** The settings the ledger is DEFINED at — 8 shuffle partitions, AQE
+    * off — applied to a session's runtime conf. Main and spec both apply
+    * them, so ledger and check can't drift on config. */
+  def ledgerSettings(s: SparkSession): SparkSession = {
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    s
+  }
 
   def fingerprintOf(s: SparkSession, name: String, sfDir: String): String =
     try fingerprint(
@@ -82,8 +81,7 @@ object PlanLedger {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", DefaultSfDir)
-    val spark = session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ledgerSettings(GraftSession(8))
     val names =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     val rows = names.map { n =>

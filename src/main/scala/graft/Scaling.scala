@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scaling-curve harness: times the heaviest declared queries across the
   * shipped scale factors (sf0.001 → sf0.01 → sf0.1, a 100× row-count span)
   * and fits a per-query growth exponent, so the SCALE.md complexity
@@ -184,15 +182,7 @@ object Scaling {
     val sfDirs = sys.env.getOrElse("SPARK_GRAFT_SF_LIST",
       "/root/testdata/sf0.001,/root/testdata/sf0.01,/root/testdata/sf0.1")
       .split(",").toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
 
     // "ALL" sweeps every declared query (the sf10 endurance mode: one
     // reading per key at the third decade, not just the Heavy carriers).

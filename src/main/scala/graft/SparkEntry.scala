@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.functions.GraftFunctions
 import graft.operators.{Analytics, Core, Curation, Dedup, Extensions, Graph, Multimodal, Pipeline, Portfolio, Similarity, Stats, TextOps}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -20,12 +21,20 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Core.q09DenormJoin(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Core.queries ++ Extensions.queries ++ Dedup.queries ++
+  /** Every builder registers the native functions on the session it is
+    * given first (once per session; a repeat is a lookup per name) — the
+    * one registration point for sessions built without GraftExtensions. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    (Core.queries ++ Extensions.queries ++ Dedup.queries ++
       Similarity.queries ++ TextOps.queries ++ Multimodal.queries ++
       Pipeline.queries ++ Graph.queries ++ Analytics.queries ++
       Stats.queries ++ Portfolio.queries ++ Curation.queries ++
-      graft.streaming.EventStream.queries
+      graft.streaming.EventStream.queries).map { case (name, build) =>
+      name -> { (s: SparkSession, dir: String) =>
+        GraftFunctions.registerAll(s)
+        build(s, dir)
+      }
+    }
 
   def oracleSql: Map[String, String] =
     Core.oracleSql ++ Extensions.oracleSql ++ Dedup.oracleSql ++

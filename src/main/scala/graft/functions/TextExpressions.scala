@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -388,15 +387,22 @@ case class GramStrings(child: Expression, n: Int)
   * micro-batch census, q348). Replaces the interpreted HOF with a
   * codegen'd loop; each token is cloned once off its source buffer so
   * the emitted structs own their bytes regardless of how the consumer
-  * buffers them. */
+  * buffers them. A null token becomes a null struct field, as in the
+  * lambda form, so the fields are nullable exactly when the input's
+  * elements are. */
 case class AdjacentPairs(child: Expression) extends UnaryExpression {
+
+  private def tokensNullable: Boolean = child.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => false
+  }
 
   override def dataType: DataType = ArrayType(
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("w1", StringType,
-        nullable = false),
+        nullable = tokensNullable),
       org.apache.spark.sql.types.StructField("w2", StringType,
-        nullable = false))),
+        nullable = tokensNullable))),
     containsNull = false)
 
   override def checkInputDataTypes()
@@ -417,11 +423,13 @@ case class AdjacentPairs(child: Expression) extends UnaryExpression {
       new org.apache.spark.sql.catalyst.util.GenericArrayData(
         Array.empty[Any])
     } else {
+      def token(j: Int): UTF8String =
+        if (arr.isNullAt(j)) null else arr.getUTF8String(j).clone()
       val out = new Array[Any](m)
-      var prev = arr.getUTF8String(0).clone()
+      var prev = token(0)
       var i = 0
       while (i < m) {
-        val next = arr.getUTF8String(i + 1).clone()
+        val next = token(i + 1)
         out(i) =
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
             Array[Any](prev, next))
@@ -445,10 +453,10 @@ case class AdjacentPairs(child: Expression) extends UnaryExpression {
          |if ($m < 0) $m = 0;
          |Object[] $out = new Object[$m];
          |org.apache.spark.unsafe.types.UTF8String $prev =
-         |  $m > 0 ? $arr.getUTF8String(0).clone() : null;
+         |  $m > 0 && !$arr.isNullAt(0) ? $arr.getUTF8String(0).clone() : null;
          |for (int $i = 0; $i < $m; $i++) {
          |  org.apache.spark.unsafe.types.UTF8String $next =
-         |    $arr.getUTF8String($i + 1).clone();
+         |    $arr.isNullAt($i + 1) ? null : $arr.getUTF8String($i + 1).clone();
          |  $out[$i] =
          |    new org.apache.spark.sql.catalyst.expressions
          |      .GenericInternalRow(new Object[] { $prev, $next });
@@ -570,7 +578,6 @@ case class WinnowKeys(child: Expression, w: Int, posBase: Long)
     copy(child = c)
 }
 
-/** Registration for all graft native functions. */
 /** True (unrestricted) Damerau–Levenshtein distance over UTF8String
   * BYTES — the Lowrance & Wagner (1975) alphabet-indexed dynamic
   * program, NOT the restricted optimal-string-alignment shortcut (the
@@ -646,64 +653,4 @@ case class DamerauLevenshtein(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DamerauLevenshtein =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  def registerAll(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProductD(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "centroid_argmax", exprs => CentroidArgMax(
-        exprs(0), exprs(1), exprs(2)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "poly_hash", exprs => PolyHash(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "simhash32", exprs => SimHash32(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash16", exprs => MinHashSig(exprs.head, 16), "built-in")
-    reg.createOrReplaceTempFunction(
-      "minhash_k", exprs => MinHashSig(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "shingle_hashes", exprs => ShingleHashes(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "gram_strings", exprs => GramStrings(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "adjacent_pairs", exprs => AdjacentPairs(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "winnow_keys", exprs => WinnowKeys(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].longValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "sum_squares", exprs => SumOfSquaresLong(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "gram_moments", exprs => GramMomentsAgg(
-        exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()), "built-in")
-    reg.createOrReplaceTempFunction(
-      "damerau_lev", exprs => DamerauLevenshtein(exprs(0), exprs(1)),
-      "built-in")
-    // Spark's own runtime-filter bloom expressions (public Catalyst
-    // classes, not in the SQL registry): bloom_agg(col, est_items,
-    // num_bits) builds the filter, bloom_might_contain(bloom, col)
-    // probes it. The probe side requires a foldable/scalar-subquery
-    // bloom argument — exactly how Spark's InjectRuntimeFilter uses it.
-    reg.createOrReplaceTempFunction(
-      "bloom_agg", exprs =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate
-          .BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "bloom_might_contain", exprs =>
-        org.apache.spark.sql.catalyst.expressions
-          .BloomFilterMightContain(exprs(0), exprs(1)),
-      "built-in")
-  }
 }

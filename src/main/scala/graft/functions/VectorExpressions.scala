@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -194,17 +194,13 @@ case class CentroidArgMax(
     copy(first = f, second = s, third = t)
 }
 
+/** Column API over the native vector expressions. `vec_dot` is defined
+  * in [[GraftFunctions.table]], so a session needs it registered
+  * ([[GraftFunctions.registerAll]], which `graft.SparkEntry.queries` runs
+  * before every build) or injected ([[graft.GraftExtensions]]). */
 object VectorFunctions {
 
-  /** Register `vec_dot` in a session's function registry (idempotent).
-    * Sessions built with [[graft.GraftExtensions]] get it injected at
-    * construction instead. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => DotProductD(exprs(0), exprs(1)), "built-in")
-
-  /** Column API: dot product of two array<double> columns (requires
-    * register() or GraftExtensions on the session). */
+  /** Dot product of two array<double> columns. */
   def vec_dot(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
 

@@ -745,7 +745,6 @@ object Analytics {
     * mutuality test as an equi-join of the K-bounded directed frame
     * against itself. */
   def q191ReciprocalNn(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     import graft.functions.VectorFunctions.vec_dot
     val base = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
@@ -960,7 +959,6 @@ object Analytics {
     * equi-join on signature is the blocking, verification is one
     * codegen'd expression per candidate. */
   def q356TypoJoinDl(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val w = t(s, dir, "supplier").select(col("s_name").as("w")).distinct()
     val sigs = w.select(col("w"), explode(expr(
       "concat(array(w), transform(sequence(1, length(w)), " +

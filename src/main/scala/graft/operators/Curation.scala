@@ -548,7 +548,6 @@ object Curation {
     * bucketing is stateless and narrow, so the same code runs under
     * a readStream source for q517). */
   private[graft] def dsirTokenBuckets(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(docs.sparkSession)
     docs.select(col("doc_id"), col("lang"),
         explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")

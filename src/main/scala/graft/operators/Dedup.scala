@@ -157,7 +157,6 @@ object Dedup {
     * on a boilerplate-heavy crawl where one band key collects millions of
     * documents. */
   def q30DedupMinhashLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     minhashCandidatePairs(plantedDocs(s, dir))
   }
 
@@ -233,7 +232,6 @@ object Dedup {
     * (in-batch survivors collapse now; vs-corpus hits drop the batch
     * doc). */
   def q152IncrementalLsh(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val banded = bandedSignatures(plantedDocs(s, dir))
     val corpusB = banded.filter(col("doc_id") < PlantedOffset)
     val batchB = banded.filter(col("doc_id") >= PlantedOffset)
@@ -414,7 +412,6 @@ object Dedup {
     * verify pass; the sweep rides the candidate frame as three
     * conditional aggregates. */
   def q483DedupThresholdSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val docs = plantedDocs(s, dir)
     val hs = docs
       .withColumn("sw_w", split(col("text"), " "))
@@ -653,7 +650,6 @@ object Dedup {
     * the planted drop-last-word twins (J = (k-3)/(k-2) for k-word
     * docs). */
   def q87VerifyCandidates(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val docs = plantedDocs(s, dir)
     // per-doc shingle SET rows (array_distinct upstream): verification is
     // an in-row array_intersect after joining each candidate to its two
@@ -726,7 +722,6 @@ object Dedup {
     * documented bias, toward over-estimating overlap and hence
     * UNDER-estimating N̂. */
   def q338CaptureRecapture(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // shared verification side: per-doc shingle SET rows (q87's shape)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
@@ -879,7 +874,6 @@ object Dedup {
   /** Banded (doc_id, sh, tripleid, key24) index rows, pre-cap. */
   private[graft] def q71BandedIndex(
       s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val comboArr = tripleKeyExprs("div")
       .map { case (tid, key) => s"struct($tid AS tripleid, $key AS key24)" }
       .mkString("array(", ", ", ")")
@@ -1056,7 +1050,6 @@ object Dedup {
     * document collapses to one int — near-dup = small hamming distance,
     * testable with a single groupBy at any scale. */
   def q31DedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // native one-pass expression: 32 bit-counters in a single array scan
     // (the HOF form needs 32 separate aggregate() folds over the tokens)
     t(s, dir, "documents")
@@ -1161,8 +1154,7 @@ object Dedup {
     * only within a bucket. Returns (vec_id_1, vec_id_2) with cosine ≥ 0.3
     * (the corpus is i.i.d. random; real near-dups would use ≥ 0.9). */
   def q33DedupEmbedding(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.{register, vec_dot}
-    register(s)
+    import graft.functions.VectorFunctions.vec_dot
     val bucketTerms = srpBucketExpr(NumPlanes, "spark")
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
@@ -1315,8 +1307,7 @@ object Dedup {
     * the O(log n)-round star CC — no stage is corpus². */
   def q501AdaptiveSrpClusters(s: SparkSession, dir: String)
       : DataFrame = {
-    import graft.functions.VectorFunctions.{register, vec_dot}
-    register(s)
+    import graft.functions.VectorFunctions.vec_dot
     val base = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -1414,7 +1405,6 @@ object Dedup {
     * round 12 after its sf10 disk-spill wall), and the linear
     * production-path alternative for corpus-wide dedup is q30+q87. */
   def q101SetSimJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // one SET row per doc (shingles are array_distinct'd): the exploded
     // form exists only transiently for the edf census and the prefix
     // rank; verification is an in-row set intersect against this frame,
@@ -1685,7 +1675,6 @@ object Dedup {
     * prefixes of length-class-bounded df — linear in corpus size for
     * the fixed cap; every stage an equi-join. */
   def q110ContainmentJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2057,7 +2046,6 @@ object Dedup {
     * band index (q152's bucketed layout) and the splits frame prunes
     * to (doc_id, split) — nothing here grows super-linearly. */
   def q224SplitLeakage(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val docs = plantedDocs(s, dir)
     val splits = docs
       .select(col("doc_id"), expr("poly_hash(text) % 100").as("b"))
@@ -2136,7 +2124,6 @@ object Dedup {
     * pairs, so the r=1 geometry's huge buckets cost a census row, not
     * a blow-up. The curve side is a literal frame. */
   def q269LshCurve(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     import s.implicits._
     val docs = t(s, dir, "documents").select("doc_id", "text")
     val measured = LshPlanGeoms.map { case (b, r) =>
@@ -2204,7 +2191,6 @@ object Dedup {
     * similarity join); the comparison is in-row zip/intersect
     * arithmetic on the two cached set rows. */
   def q284MinhashAccuracy(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2277,7 +2263,6 @@ object Dedup {
     * planted-offset equi-join, a fixed-k in-row fold; nothing
     * corpus². */
   def q503BbitMinhash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2361,7 +2346,6 @@ object Dedup {
     * before the 4-row census; pair volume is q30's audited-linear
     * collision volume, never all-pairs. */
   def q295CandidateTriage(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val banded = bandedSignatures(plantedDocs(s, dir))
     val x = banded.as("x")
     val y = banded.as("y")
@@ -2523,7 +2507,6 @@ object Dedup {
     * machinery — the point is the COMPOSITION, which is how a production
     * pipeline gets paragraph dedup without a second engine. */
   def q300ChunkNearDup(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     chunkPairCensus(minhashCandidatePairs(
       chunkPseudoDocs(plantedDocs(s, dir))))
   }
@@ -2621,7 +2604,6 @@ object Dedup {
     * prefixes at looser τ raise the constant, not the growth);
     * counts, not pairs, are released. */
   def q318ThresholdSweep(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val hs = plantedDocs(s, dir)
       .withColumn("sw_w", split(col("text"), " "))
       .filter(size(col("sw_w")) >= ShingleN)
@@ -2876,7 +2858,6 @@ object Dedup {
     * detect duplicated spans ≥ N tokens; shorter overlaps are below
     * the declared resolution). */
   def q515DupSpanFraction(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val n = DupGramN
     val grams = t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))

@@ -105,8 +105,7 @@ object Extensions {
   // cross join: at scale this is a map-only pass over the embeddings + a
   // TakeOrderedAndProject — no shuffle of the data itself.
   def q25TopkSimilarity(s: SparkSession, dir: String): DataFrame = {
-    import graft.functions.VectorFunctions.{register, vec_dot}
-    register(s)
+    import graft.functions.VectorFunctions.vec_dot
     val emb = t(s, dir, "embeddings")
     val probe = emb.filter(col("vec_id") === 0L)
       .select(col("embedding").cast("array<double>").as("probe"))
@@ -494,7 +493,6 @@ object Extensions {
     * filter), and the false-positive rate within 5% of non-matching
     * rows. */
   def q88BloomPrune(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     Tables.registerAll(s, dir)
     val (estItems, numBits) = bloomGeometry(s)
     s.sql(
@@ -823,7 +821,6 @@ object Extensions {
   // custom aggregate would need a decimal buffer past that (documented
   // trade; the aggregate demo is the point of this query).
   def q56Moments(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     t(s, dir, "customer")
       .groupBy("c_nationkey")
       .agg(

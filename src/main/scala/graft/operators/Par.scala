@@ -1,9 +1,12 @@
 package graft.operators
 
+import java.util.UUID
 import java.util.concurrent.Executors
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 
@@ -22,8 +25,10 @@ import org.apache.spark.sql.DataFrame
   *
   * Semantics are unchanged: each frame is the same eager
   * localCheckpoint it was before, just submitted concurrently.
-  * Failures propagate (Await rethrows), so an error in any branch
-  * still fails the query loudly.
+  * Failures propagate: the branches run under one job group, and the
+  * first failure cancels the group — its running jobs and any a
+  * sibling submits later — then waits for every branch to stop before
+  * it is rethrown, so no orphaned job outlives the call.
   */
 private[graft] object Par {
 
@@ -32,12 +37,29 @@ private[graft] object Par {
   def checkpointAll(dfs: DataFrame*): Seq[DataFrame] = {
     if (dfs.sizeIs <= 1) dfs.map(_.localCheckpoint(true)).toSeq
     else {
-      val pool = Executors.newFixedThreadPool(dfs.size)
+      val sc = dfs.head.sparkSession.sparkContext
+      val group = s"graft-par-${UUID.randomUUID()}"
+      val threads = new AtomicInteger()
+      val pool = Executors.newFixedThreadPool(dfs.size, (r: Runnable) => {
+        val t = new Thread(r, s"graft-par-${threads.incrementAndGet()}")
+        t.setDaemon(true)
+        t
+      })
       implicit val ec: ExecutionContext =
         ExecutionContext.fromExecutor(pool)
       try {
-        val fs = dfs.map(df => Future(df.localCheckpoint(true)))
-        fs.map(Await.result(_, Duration.Inf)).toSeq
+        val fs = dfs.map(df => Future {
+          sc.setJobGroup(group, "Par.checkpointAll", interruptOnCancel = true)
+          df.localCheckpoint(true)
+        })
+        // Future.sequence fails as soon as any branch fails
+        try Await.result(Future.sequence(fs), Duration.Inf).toSeq
+        catch { case NonFatal(e) =>
+          sc.cancelJobGroupAndFutureJobs(group,
+            s"a sibling branch failed: ${e.getMessage}")
+          fs.foreach(Await.ready(_, Duration.Inf))
+          throw e
+        }
       } finally pool.shutdown()
     }
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 import graft.functions.PortableHash._
 import graft.sources.Tables.{load => t}
 
@@ -36,7 +35,6 @@ object Pipeline {
     * exact duplicates in the same split — id-based or random splits leak
     * dup pairs across train/test. */
   def q62HashSplit(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     t(s, dir, "documents")
       .select(col("doc_id"),
         expr("poly_hash(text) % 100").as("bucket"))
@@ -203,7 +201,6 @@ object Pipeline {
     * the surviving rows. This is the daily-ingest shape: work scales
     * with the batch, not the corpus. */
   def q75IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val all = t(s, dir, "documents")
       .select(col("doc_id"), expr("poly_hash(text)").as("fp"))
     val corpusFps = all.filter(col("doc_id") < 250L).select("fp")
@@ -262,7 +259,6 @@ object Pipeline {
     * the benchmark. Documents shorter than 5 tokens have no 5-grams and
     * always survive — both engines agree by construction. */
   def q84Decontaminate(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val docs = t(s, dir, "documents").select("doc_id", "text")
     decontaminate(
       docs.filter(col("doc_id") % 10 =!= 0),
@@ -310,7 +306,6 @@ object Pipeline {
     * (same property as q62's split) and membership is stable under
     * re-runs and re-partitioning, unlike `df.sample`. */
   def q85StratifiedSample(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val docs = t(s, dir, "documents")
     val rates = docs.groupBy("lang")
       .agg(count(lit(1)).as("cnt"))
@@ -347,7 +342,6 @@ object Pipeline {
   def prepareCorpus(
       spark: SparkSession, docs: DataFrame, out: Option[String] = None)
       : DataFrame = {
-    graft.functions.GraftFunctions.registerAll(spark)
     // 1. quality gate: enough tokens, no degenerate repetition
     val gated = docs
       .withColumn("pc_ws", split(col("text"), " "))
@@ -1445,7 +1439,6 @@ object Pipeline {
     * (TakeOrderedAndProject — K rows per partition cross the wire). One
     * scan, no shuffle beyond the K-row gather. */
   def q237WeightedSample(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars").as("weight"),
         expr("""(poly_hash(text) % 1000003) * 1000000
@@ -2141,7 +2134,6 @@ object Pipeline {
     * \|strata\|·k partial rows. */
   def q398BottomkSample(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    GraftFunctions.registerAll(s)
     val prio = t(s, dir, "documents")
       .select(col("lang"), col("doc_id").as("id"),
         // negated: TopKByScore keeps the HIGHEST scores (ties → lower
@@ -2190,7 +2182,6 @@ object Pipeline {
     * construction. At corpus scale the legs shard (BM25 by posting,
     * ANN by cell) and the fusion cost stays |results|, not |corpus|. */
   def q402HybridRetrieval(s: SparkSession, dir: String): DataFrame = {
-    GraftFunctions.registerAll(s)
     val bm25 = bm25TopK(t(s, dir, "documents"), Bm25Terms, Bm25TopK)
       .select(col("doc_id"), col("rank").as("bm25_rank"))
     val e = t(s, dir, "embeddings")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.functions.VectorFunctions.{register, vec_dot}
+import graft.functions.VectorFunctions.vec_dot
 import graft.sources.Tables.{load => t}
 
 /** Approximate-nearest-neighbor search over the embeddings column.
@@ -33,7 +33,6 @@ object Similarity {
 
   /** Embeddings with double-cast vectors and precomputed norms. */
   private[graft] def vectors(s: SparkSession, dir: String): DataFrame = {
-    register(s)
     t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -70,7 +69,6 @@ object Similarity {
     centroidRow(e, NumCentroids)
 
   private[graft] def centroidRow(e: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(e.sparkSession)
     e.filter(col("vec_id") < k)
       .agg(array_sort(collect_list(struct(
         col("vec_id").as("cent_id"), col("ed").as("ced"),
@@ -432,7 +430,6 @@ object Similarity {
     * carries ONE 2145-long buffer per map partition instead of
     * n·2080 rows. */
   private def gramMomentsRow(vecs: DataFrame, vcol: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(vecs.sparkSession)
     // n > 0 guard: a no-GROUP-BY TypedImperativeAggregate always emits
     // one row, so an EMPTY relation would yield an all-zero buffer —
     // the replaced explode+groupBy form (and the DuckDB oracles)
@@ -492,7 +489,6 @@ object Similarity {
     * q29's IVF cell restriction; recall grows with fewer planes or
     * multi-probe across neighboring buckets). */
   def q52AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    register(s)
     val bucketTerms = (0 until Dedup.NumPlanes).map { p =>
       s"(CASE WHEN vec_dot(ed, ${planeLitSpark(p)}) >= 0D " +
         s"THEN ${1 << p} ELSE 0 END)"
@@ -546,7 +542,6 @@ object Similarity {
     * TopKAggregator.scala). */
   def q42TopkPerLabel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    register(s)
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -689,7 +684,6 @@ object Similarity {
     * broadcast one-row in-row argmax as q29 — zero corpus shuffle —
     * and the confusion matrix is O(labels²). */
   def q111KmeansRefine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))
@@ -857,7 +851,6 @@ object Similarity {
     * partition); stage 2 is a window over $RerankPool rows — the
     * corpus is never shuffled, never joined pairwise. */
   def q128RerankAnn(s: SparkSession, dir: String): DataFrame = {
-    register(s)
     val e = t(s, dir, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(vec_dot(col("ed"), col("ed"))))

@@ -140,7 +140,6 @@ object TextOps {
     * (the portable-hash primitive itself, exposed as an operator; native
     * codegen'd byte fold, bit-identical to the HOF char fold on ASCII). */
   def q37Fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     t(s, dir, "documents").select(
       col("doc_id"),
       expr("poly_hash(text)").as("fingerprint"))
@@ -208,7 +207,6 @@ object TextOps {
       .select(col("doc_id"), explode(col("ws")).as("w"))
       .groupBy("doc_id", "w").agg(count(lit(1)).as("c"))
       .groupBy("doc_id").agg(max("c").as("top_token_n"))
-    graft.functions.GraftFunctions.registerAll(s)
     val topBi = docs
       .filter(size(col("ws")) >= 2)
       // native codegen gram generator (round 13, guide §4) — the
@@ -594,7 +592,6 @@ object TextOps {
     * the expression instead of silently corrupting the position pack.
     */
   def q102Winnowing(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     winnowKeyed(t(s, dir, "documents"))
   }
 
@@ -605,7 +602,6 @@ object TextOps {
     * size(wn_t) < ShingleN + w - 1) and explode drops empties — a filter
     * here would just push a second regex split below the project. */
   private[operators] def winnowKeyed(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(docs.sparkSession)
     val w = WinnowW
     val pb = WinnowPosBase
     docs
@@ -733,7 +729,6 @@ object TextOps {
     * per-doc aggregate — O(corpus bigrams) with map-side reduction,
     * never pairwise. */
   def q112BigramNovelty(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val sh = t(s, dir, "documents")
       .select(col("doc_id"), explode(expr(
         "array_distinct(shingle_hashes(split(text, ' '), 2))")).as("h"))
@@ -781,7 +776,6 @@ object TextOps {
     * the df cap drops them, same reasoning as a stop-shingle list), then
     * a pair count + threshold. Never all-pairs. */
   def q113FingerprintMatch(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     // distinct (doc, fingerprint-hash): positions don't matter for
     // matching, only WHICH fingerprints collide
     val fps = q102Winnowing(s, dir)
@@ -868,7 +862,6 @@ object TextOps {
                                    CAST(size(toks) - 1 AS BIGINT))))))"""
 
   def q122BoilerplateScrub(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val W = ScrubSpanTokens
     val fps = q102Winnowing(s, dir).cache() // census + marks both read it
     val hot = fps.select("doc_id", "fp_hash").distinct()
@@ -1336,7 +1329,6 @@ object TextOps {
     * This is the sketch you keep PER CORPUS SHARD and merge at publish
     * time — the q94 mergeable-stats contract applied to frequencies. */
   def q144Countmin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val toks = t(s, dir, "documents")
       .select(split(col("text"), " ").as("tw"))
       .filter(size(col("tw")) >= 2)
@@ -1420,7 +1412,6 @@ object TextOps {
     * count (vocabulary-bounded, the q137 state argument). The frame is
     * checkpointed once for its three consumers (q177 discipline). */
   def q214BigramLmScore(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     val big = t(s, dir, "documents")
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .filter(size(col("ws")) >= 2)
@@ -1779,7 +1770,6 @@ object TextOps {
     * no self-join, no shuffle; bigrams never leave the row until the
     * census groupBy). */
   private def adjacentBigrams(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.registerAll(s)
     adjacentBigramsOf(t(s, dir, "documents"))
   }
 
@@ -2146,7 +2136,6 @@ object TextOps {
       .select(expr(s"doc_id * $GrowthBuckets div nd").as("b"),
         split(col("text"), " ").as("ws"))
       .localCheckpoint(true)
-    graft.functions.GraftFunctions.registerAll(s)
     val firstB = toks
       .filter(size(col("ws")) >= 3)
       // native codegen trigram generator (round 13, guide §4)

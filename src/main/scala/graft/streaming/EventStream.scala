@@ -530,7 +530,6 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.registerAll(s)
     val D = graft.operators.Dedup
     var index = Seq.empty[(Long, Int, String)]
       .toDF("doc_id", "band", "bkey")
@@ -590,7 +589,6 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.registerAll(s)
     val D = graft.operators.Dedup
     var index = Seq.empty[(Long, Int, String)]
       .toDF("doc_id", "band", "bkey")
@@ -1654,7 +1652,6 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    graft.functions.GraftFunctions.registerAll(s)
     val T = graft.operators.TextOps
     var counts = Seq.empty[(String, String, Long)]
       .toDF("w1", "w2", "c12")

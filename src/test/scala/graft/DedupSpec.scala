@@ -10,7 +10,6 @@ class DedupSpec extends SparkSpec {
 
   test("containmentJoinExact containedPred pins the audit-stratum " +
     "contract: capped result == uncapped result filtered to the cap") {
-    graft.functions.GraftFunctions.registerAll(spark)
     val hs = graft.sources.Tables.load(spark, sf1, "documents")
       .withColumn("hsd", expr(
         s"shingle_hashes(split(text, ' '), ${Dedup.ShingleN})"))
@@ -46,7 +45,6 @@ class DedupSpec extends SparkSpec {
 
   test("geometry scaling is prefix-stable: widening appends hash " +
     "functions without changing any default-geometry value") {
-    graft.functions.GraftFunctions.registerAll(spark)
     // minhash family: the first 16 of a 24-hash signature ARE minhash16
     val docs = graft.sources.Tables.load(spark, sf1, "documents")
       .withColumn("hsd", expr(

@@ -2,16 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
-
 /** Edge inputs for the native expressions: empty strings/arrays, short
   * arrays, nulls — the cases a 100 TB corpus WILL contain somewhere. */
 class ExpressionEdgeSpec extends SparkSpec {
 
-  private def one(sqlExpr: String): org.apache.spark.sql.Row = {
-    GraftFunctions.registerAll(spark)
+  private def one(sqlExpr: String): org.apache.spark.sql.Row =
     spark.range(1).selectExpr(sqlExpr + " AS v").head()
-  }
 
   test("poly_hash of empty string is 0; null propagates") {
     assert(one("poly_hash('')").getLong(0) === 0L)
@@ -46,7 +42,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("winnow_keys matches the HOF formulation on random hash arrays") {
-    GraftFunctions.registerAll(spark)
     val pb = 1048576L
     val w = 4
     val rnd = new scala.util.Random(42)
@@ -89,7 +84,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("sum_squares over an empty relation returns the zero buffer") {
-    GraftFunctions.registerAll(spark)
     val r = spark.range(0).selectExpr("sum_squares(id) AS s").head()
     assert(r.getLong(0) === 0L)
   }
@@ -178,7 +172,6 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("gram_strings equals the transform+concat_ws lambda form") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val texts = Seq("a b c d e", "x y", "lone", "", "p q r").toDF("t")
       .selectExpr("split(t, ' ') AS ws")
@@ -203,10 +196,13 @@ class ExpressionEdgeSpec extends SparkSpec {
   }
 
   test("adjacent_pairs equals the transform+struct lambda form") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
+    // the last input holds a null token: the lambda form emits it as a
+    // null struct field, so the native loop must too
     val texts = Seq("a b c d", "x y", "lone", "").toDF("t")
       .selectExpr("split(t, ' ') AS ws")
+      .union(spark.range(1).selectExpr(
+        "array('p', CAST(NULL AS STRING), 'q', 'r') AS ws"))
     val native = texts
       .selectExpr("explode(adjacent_pairs(ws)) AS b")
       .selectExpr("b.w1", "b.w2")
@@ -220,5 +216,10 @@ class ExpressionEdgeSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(native === hof) // native emits nothing for short rows
     assert(one("adjacent_pairs(CAST(NULL AS ARRAY<STRING>))").isNullAt(0))
+    // a literal input is constant-folded: the interpreted path
+    val folded = one("adjacent_pairs(array('a', CAST(NULL AS STRING)))")
+      .getSeq[org.apache.spark.sql.Row](0)
+    assert(folded.map(r => (r.getString(0), r.getString(1))) ===
+      Seq(("a", null)))
   }
 }

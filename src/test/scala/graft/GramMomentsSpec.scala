@@ -16,7 +16,6 @@ class GramMomentsSpec extends SparkSpec {
   /** The milli-grid vectors q315 feeds the aggregate (exercises
     * negative values too). */
   private def vecs = {
-    graft.functions.GraftFunctions.registerAll(spark)
     Tables.load(spark, sf1, "embeddings")
       .withColumn("mv", expr(
         "transform(CAST(embedding AS ARRAY<DOUBLE>), " +
@@ -97,7 +96,6 @@ class GramMomentsSpec extends SparkSpec {
   }
 
   test("hand-computed d=3 fixture pins the buffer layout exactly") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     // three vectors, negative values included; one NULL vector row
     // (skipped by the aggregate, like the element_at form it replaced)
@@ -120,7 +118,6 @@ class GramMomentsSpec extends SparkSpec {
   }
 
   test("a vector shorter than the declared width fails loudly") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     val df = Seq(Seq(1L, 2L)).toDF("mv")
     val e = intercept[Exception] {

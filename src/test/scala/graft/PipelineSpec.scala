@@ -56,7 +56,6 @@ class PipelineSpec extends SparkSpec {
     // duplicate the corpus under shifted ids: every text's split must
     // match its copy's — the property id-hash or random splits lack
     val docs = graft.sources.Tables.load(spark, sf1, "documents")
-    graft.functions.GraftFunctions.registerAll(spark)
     val withBucket = docs.select(col("doc_id"),
       expr("poly_hash(text) % 100").as("b"))
     val copy = docs.select((col("doc_id") + 7777L).as("doc_id2"),
@@ -172,7 +171,6 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("q75 emits no fingerprint present in the corpus partition") {
-    graft.functions.GraftFunctions.registerAll(spark)
     val out = graft.operators.Pipeline
       .q75IncrementalDedup(spark, sf1).cache()
     val corpusFps = graft.sources.Tables.load(spark, sf1, "documents")
@@ -196,7 +194,6 @@ class PipelineSpec extends SparkSpec {
 
   test("q84 removes planted verbatim contamination, keeps clean docs") {
     import spark.implicits._
-    graft.functions.GraftFunctions.registerAll(spark)
     val bench = Seq((0L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")
     val corpus = Seq(
@@ -714,7 +711,6 @@ class PipelineSpec extends SparkSpec {
     val rows = Pipeline.q398BottomkSample(spark, sf1).collect()
       .map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"),
         r.getAs[Long]("rank")))
-    graft.functions.GraftFunctions.registerAll(spark)
     val prio = graft.sources.Tables.load(spark, sf1, "documents")
       .select(col("lang"), col("doc_id"),
         expr("poly_hash(text)").as("p"))

@@ -13,9 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * change: `sbt "runMain graft.PlanLedger"`, review the git diff of
   * plans_ledger.json (that diff IS the plan review), commit both.
   *
-  * Runs in its own AQE-off session (PlanLedger.session) — separate from
-  * TestSpark's shared AQE-on session — because the ledger is defined
-  * against static plans. Planning-only: nothing here executes beyond
+  * Runs in its own AQE-off session (PlanLedger.ledgerSettings on a
+  * newSession) — separate from TestSpark's shared AQE-on session —
+  * because the ledger is defined against static plans. Planning-only: nothing here executes beyond
   * the construction-time jobs some iterative queries run at sf0.001.
   */
 class PlanLedgerSpec extends AnyFunSuite {
@@ -49,10 +49,7 @@ class PlanLedgerSpec extends AnyFunSuite {
     // AQE-on session and poison every count, so fork a session with its
     // own conf over the shared context (newSession keeps the context,
     // and runtime conf is per-session).
-    val base = TestSpark.spark
-    val s = base.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "false")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val s = PlanLedger.ledgerSettings(TestSpark.spark.newSession())
     val diffs = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>
       val got = PlanLedger.fingerprintOf(s, name, PlanLedger.DefaultSfDir)
       s.catalog.clearCache()

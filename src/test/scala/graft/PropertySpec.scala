@@ -4,8 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-import graft.functions.GraftFunctions
-
 /** Property-style checks (SURVEY.md §5.2.3): the native Catalyst
   * expressions are compared against straight-line Scala models over
   * generated inputs, and relational invariants are checked on generated
@@ -76,7 +74,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("poly_hash equals the byte-fold model on random ASCII strings") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val asciiGen = Gen.listOf(Gen.choose(32.toChar, 126.toChar))
       .map(_.mkString)
@@ -90,7 +87,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("simhash32 equals the bit-counter model on random token arrays") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val arrGen = Gen.listOf(Gen.choose(0L, (1L << 32) - 1))
     val inputs = sample(arrGen, 200).zipWithIndex
@@ -103,7 +99,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("vec_dot equals the sequential-fold model on random vectors") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val vGen = Gen.listOfN(16, Gen.choose(-10.0, 10.0))
     val pairs = sample(Gen.zip(vGen, vGen), 200).zipWithIndex
@@ -221,7 +216,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("centroid_argmax equals the scan-and-compare model on random data") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val vGen = Gen.listOfN(8, Gen.choose(-4.0, 4.0))
       .suchThat(_.exists(_ != 0.0))
@@ -252,7 +246,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("shingle_hashes equals poly_hash(concat_ws(...)) on random word arrays") {
-    GraftFunctions.registerAll(spark)
     import spark.implicits._
     val word = Gen.listOf(Gen.alphaLowerChar).map(_.mkString)
     val doc = Gen.choose(3, 12).flatMap(k => Gen.listOfN(k, word))
@@ -486,7 +479,6 @@ class PropertySpec extends SparkSpec {
     assert(out.keySet === (0L until
       graft.operators.Similarity.NumProbes.toLong).toSet)
     // brute-force truth recomputed independently of the operator
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.sources.Tables.load(spark, sf1, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(expr("vec_dot(ed, ed)")))
@@ -522,7 +514,6 @@ class PropertySpec extends SparkSpec {
     assert(out.keySet === (0L until S.KnnProbes.toLong).toSet)
     // independent replay: top-k by cosine, majority with (count desc,
     // label asc) tie-break
-    graft.functions.VectorFunctions.register(spark)
     val e = graft.sources.Tables.load(spark, sf1, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("nrm", sqrt(expr("vec_dot(ed, ed)")))

@@ -3,21 +3,18 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session for all suites (one JVM, one SparkSession). */
+/** Shared session for all suites (one JVM, one SparkSession): the
+  * GraftSession settings plus a disposable warehouse, with the native
+  * functions registered once — specs call operator builders directly,
+  * not through SparkEntry.queries. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf: bucketed-table tests need a disposable catalog
+    // static conf: bucketed-table tests need a disposable catalog
+    val s = GraftSession.builder()
       .config("spark.sql.warehouse.dir", java.nio.file.Files
         .createTempDirectory("graft-test-warehouse").toString)
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.registerAll(s)
     s
   }
   val sf1: String = "/root/testdata/sf0.001"

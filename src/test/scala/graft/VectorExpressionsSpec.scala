@@ -12,7 +12,6 @@ import graft.sources.Tables
 class VectorExpressionsSpec extends SparkSpec {
 
   private def vecs = {
-    VectorFunctions.register(spark)
     Tables.load(spark, sf1, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
   }
@@ -63,7 +62,6 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("sum_squares DeclarativeAggregate stays in whole-stage codegen " +
     "and matches the expression form") {
-    graft.functions.GraftFunctions.registerAll(spark)
     val df = Tables.load(spark, sf1, "customer")
       .groupBy("c_nationkey")
       .agg(
@@ -77,7 +75,6 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("centroid_argmax ranks NaN cosines first (zero-norm edge), " +
     "ties toward the smallest cent_id — DuckDB ORDER BY DESC semantics") {
-    graft.functions.GraftFunctions.registerAll(spark)
     import spark.implicits._
     val v = List(1.0, 0.0)
     val zero = List(0.0, 0.0)
@@ -130,7 +127,6 @@ class VectorExpressionsSpec extends SparkSpec {
     }
     // prefix stability: sign(dims 0..3) rebuilds the q33 SRP bucket
     import org.apache.spark.sql.functions._
-    graft.functions.VectorFunctions.register(spark)
     val buckets = graft.sources.Tables.load(spark, sf1, "embeddings")
       .withColumn("ed", col("embedding").cast("array<double>"))
       .withColumn("bucket", expr(
