@@ -506,41 +506,34 @@ object Dedup {
                  struct(doc_id_2 AS src, doc_id_1 AS dst))""")).as("e"))
       .select("e.*")
       .cache()
-    // localCheckpoint per round: truncates the iterative lineage (a
-    // cached-only loop grows its logical plan every round until
-    // planning dominates — or OOMs on high-diameter graphs)
-    var labels = nodes.select(col("doc_id"), col("doc_id").as("cluster"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var rounds = 0
-    while (changed > 0 && rounds < maxRounds) {
+    // the state carries a `chg` flag through the propagation select — a
+    // separate old-vs-new join per round would double the join count;
+    // the loop stops at the first round that changes no label
+    val (stepped, _, converged) = Iterate("cc-propagation",
+        nodes.select(col("doc_id"), col("doc_id").as("cluster")),
+        maxRounds) { (prev, _) =>
+      val labels = prev.drop("chg")
       val nbrMin = edges
         .join(labels.select(col("doc_id").as("dst"),
           col("cluster").as("nbr_cluster")), "dst")
         .groupBy(col("src").as("doc_id"))
         .agg(min("nbr_cluster").as("nbr_min"))
-      // carry the changed flag through the propagation select — a
-      // separate old-vs-new join per round would double the join count
-      val stepped = labels
+      labels
         .join(nbrMin, Seq("doc_id"), "left")
         .select(col("doc_id"),
           least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
             .as("cluster"),
           (coalesce(col("nbr_min"), col("cluster")) < col("cluster"))
             .as("chg"))
-        .localCheckpoint(true)
-      changed = stepped.filter(col("chg")).count()
-      labels = stepped.drop("chg")
-      rounds += 1
-    }
+    }(r => r.next.filter(col("chg")).count() == 0L)
     edges.unpersist()
-    if (changed > 0)
+    if (!converged)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxRounds rounds " +
           "(graph diameter exceeds the budget); use " +
           "connectedComponentsStar, which needs O(log n) rounds on any " +
           "topology")
-    labels
+    stepped.drop("chg")
   }
 
   private def q63OracleSql: String =
@@ -1005,38 +998,17 @@ object Dedup {
         .unionByName(withMin.select(col("a").as("u"), col("m").as("v"))))
     }
 
-    // localCheckpoint per round: an iterative plan that only CACHES
-    // still grows its logical plan exponentially (each round references
-    // the last several times) until planning itself OOMs — checkpointing
-    // truncates the lineage to a materialized LogicalRDD each round,
-    // which is the production discipline for iterative graph jobs too.
-    val sc = pairs.sparkSession.sparkContext
-    sc.setJobDescription("cc: init canon")
-    // the eager checkpoint's materialization IS a count —
-    // EagerCount returns it, saving one driver round-trip per
-    // checkpoint (the loop runs ~6 per query, all tiny frames whose
-    // cost is pure scheduling)
-    var (edges, edgeCount) = org.apache.spark.sql.graft.EagerCount
-      .localCheckpointWithCount(canon(pairs.select(
-        col("doc_id_1").as("u"), col("doc_id_2").as("v"))))
-    var stable = false
-    var rounds = 0
-    while (!stable && rounds < 30) {
-      sc.setJobDescription(s"cc: round ${rounds + 1}")
-      val (next, nextCount) = org.apache.spark.sql.graft.EagerCount
-        .localCheckpointWithCount(
-          star(star(edges, large = true), large = false))
-      // canon() makes both sides distinct sets, so equal cardinality +
-      // one-directional containment proves equality — one exceptAll job
-      // per round (the count rides the checkpoint job itself), and the
-      // count check short-circuits the containment job on every
-      // non-final round
-      stable = nextCount == edgeCount && next.exceptAll(edges).isEmpty
-      edges = next
-      edgeCount = nextCount
-      rounds += 1
-    }
-    sc.setJobDescription(null)
+    // Checkpointed every round: each round references the last several
+    // times, so a cached-only plan grows exponentially until planning
+    // OOMs. canon() makes both sides distinct sets, so equal cardinality
+    // + one-directional containment proves equality; the count rides the
+    // checkpoint job and short-circuits the exceptAll job on every
+    // non-final round
+    val (edges, rounds, stable) = Iterate("cc",
+        canon(pairs.select(col("doc_id_1").as("u"), col("doc_id_2").as("v"))),
+        30) { (edges, _) =>
+      star(star(edges, large = true), large = false)
+    }(r => r.nextCount == r.prevCount && r.next.exceptAll(r.prev).isEmpty)
     if (!stable)
       throw new IllegalStateException(
         "connectedComponentsStar did not converge in 30 rounds — " +

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SqlBridge
 
 import graft.sources.Tables.{load => t}
 
@@ -13,9 +14,10 @@ import graft.sources.Tables.{load => t}
   * Scale design: each iteration is ONE shuffle (contributions grouped by
   * destination) plus a broadcast-sized rank frame join; the edge list —
   * the 100 TB side — is scanned once per iteration from cache and is
-  * never collected or re-derived. `localCheckpoint` after every round
-  * truncates the logical plan, which otherwise grows exponentially with
-  * iteration count (planning OOMs before execution does).
+  * never collected or re-derived. Every loop runs through [[Iterate]],
+  * whose periodic checkpoint truncates the logical plan, which otherwise
+  * grows exponentially with iteration count (planning OOMs before
+  * execution does).
   *
   * Determinism design: ranks are FIXED-POINT BIGINTs (scale 10⁶), and
   * every operation is integer (`div`, `+`, `*`): integer addition
@@ -44,25 +46,22 @@ object Graph {
     val ed = edges.join(edges.groupBy("src")
         .agg(count(lit(1)).as("pr_deg")), "src")
       .select("src", "dst", "pr_deg").cache()
-    var ranks = nodes.select(col("id"), lit(scale).as("rank_scaled"))
-    for (round <- 1 to iters) {
+    // plan growth per round is linear (each round references the
+    // previous once), so a checkpoint every 4th round suffices; an
+    // every-round one costs a job per round for no planning benefit
+    val (ranks, _, _) = Iterate("pagerank",
+        nodes.select(col("id"), lit(scale).as("rank_scaled")), iters,
+        checkpointEvery = 4) { (ranks, _) =>
       val contribs = ed
         .join(ranks, ed("src") === ranks("id"))
         .select(col("dst").as("id"),
           expr(s"((rank_scaled * 85) div 100) div pr_deg").as("c"))
         .groupBy("id").agg(sum("c").as("m"))
-      ranks = nodes.select(col("id"))
+      nodes.select(col("id"))
         .join(contribs, Seq("id"), "left")
         .select(col("id"),
           (lit(base) + coalesce(col("m"), lit(0L))).as("rank_scaled"))
-      // plan growth per round is linear (each round references the
-      // previous once), so truncation every few rounds suffices — an
-      // every-round eager checkpoint costs one extra job per round for
-      // no planning benefit. The final round always checkpoints: the
-      // returned frame is a materialized RDD, not a 5-round lineage.
-      if (round % 4 == 0 || round == iters)
-        ranks = ranks.localCheckpoint(true)
-    }
+    }()
     ed.unpersist()
     ranks
   }
@@ -314,10 +313,11 @@ object Graph {
     val bi = und.select(col("u").as("src"), col("v").as("dst"))
       .unionByName(und.select(col("v").as("src"), col("u").as("dst")))
       .cache() // one consumer per round; drivers clearCache between queries
-    var lbl = nodes.select(col("id"), col("id").as("lbl"))
     val w = Window.partitionBy("id")
       .orderBy(col("cnt").desc, col("lbl").asc)
-    for (round <- 1 to rounds) {
+    val (lbl, _, _) = Iterate("lpa",
+        nodes.select(col("id"), col("id").as("lbl")), rounds,
+        checkpointEvery = 2) { (lbl, _) =>
       val mode = bi
         .join(lbl.withColumnRenamed("id", "src"), "src")
         .groupBy(col("dst").as("id"), col("lbl"))
@@ -325,11 +325,9 @@ object Graph {
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
         .select(col("id"), col("lbl").as("new_lbl"))
-      lbl = lbl.join(mode, Seq("id"), "left")
+      lbl.join(mode, Seq("id"), "left")
         .select(col("id"), coalesce(col("new_lbl"), col("lbl")).as("lbl"))
-      if (round % 2 == 0 || round == rounds)
-        lbl = lbl.localCheckpoint(true)
-    }
+    }()
     bi.unpersist()
     lbl
   }
@@ -408,8 +406,8 @@ object Graph {
     * cached edge frame against the active set (src side, then dst side)
     * plus one node-keyed count — all equi-joins on node ids; at scale
     * the active set is the broadcast side once peeling bites.
-    * `localCheckpoint` every third round truncates the loop lineage
-    * (the q99 discipline). Returns (id, core_deg) for core members. */
+    * The active set is checkpointed every round (the q99 discipline).
+    * Returns (id, core_deg) for core members. */
   def kCore(und: DataFrame, k: Int = KCoreK,
       rounds: Int = KCoreRounds): DataFrame = {
     val bi = und.select(col("u").as("src"), col("v").as("dst"))
@@ -424,24 +422,15 @@ object Graph {
     // was active at t), hence equal cardinality across a round proves
     // the set is unchanged — and an unchanged set makes every later
     // round the identity, so exiting early returns EXACTLY the
-    // declared `rounds`-round result. EagerCount folds the cardinality
-    // into each round's checkpoint job; on converged graphs this turns
-    // `rounds` lazy-chained peels into the 2-4 that do work — the same
-    // saving at 100 TB, where each skipped round is a real pass.
-    var (active, activeCnt) = org.apache.spark.sql.graft.EagerCount
-      .localCheckpointWithCount(
-        bi.select(col("src").as("id")).distinct())
-    var round = 1
-    var fixed = false
-    while (round <= rounds && !fixed) {
-      val (nextActive, nextCnt) = org.apache.spark.sql.graft.EagerCount
-        .localCheckpointWithCount(activeDegrees(active)
-          .filter(col("deg") >= k).select(col("src").as("id")))
-      fixed = nextCnt == activeCnt
-      active = nextActive
-      activeCnt = nextCnt
-      round += 1
-    }
+    // declared `rounds`-round result. The cardinality rides each
+    // round's checkpoint job; on converged graphs this turns `rounds`
+    // lazy-chained peels into the 2-4 that do work — the same saving at
+    // 100 TB, where each skipped round is a real pass.
+    val (active, _, _) = Iterate("kcore",
+        bi.select(col("src").as("id")).distinct(), rounds) { (active, _) =>
+      activeDegrees(active).filter(col("deg") >= k)
+        .select(col("src").as("id"))
+    }(r => r.nextCount == r.prevCount)
     val core = activeDegrees(active)
       .select(col("src").as("id"), col("deg").cast("bigint").as("core_deg"))
     bi.unpersist()
@@ -547,18 +536,16 @@ object Graph {
     val edges = s.sql(weightedCorridorSql("g234_lineitem", "g234_orders",
         "g234_customer", "g234_supplier", "div"))
       .localCheckpoint(true)
-    var dist = edges.sparkSession
-      .range(1).select(lit(0L).as("id"), lit(0L).as("cost"))
-    for (round <- 1 to SsspHops) {
+    Iterate("sssp", edges.sparkSession
+        .range(1).select(lit(0L).as("id"), lit(0L).as("cost")),
+        SsspHops) { (dist, _) =>
       val relaxed = edges
         .join(dist, edges("src") === dist("id"))
         .select(col("dst").as("id"), (col("cost") + col("w")).as("cost"))
         .groupBy("id").agg(min("cost").as("cost"))
-      dist = dist.unionByName(relaxed)
+      dist.unionByName(relaxed)
         .groupBy("id").agg(min("cost").as("cost"))
-        .localCheckpoint(true)
-    }
-    dist
+    }()._1
   }
 
   private def q234OracleSql: String =
@@ -815,92 +802,81 @@ object Graph {
     // is a no-op, so the loop exits early with the exact final ranks.
     // At sf10 this is what turns 5 dense edge-shuffles into a couple
     // of frontier-sized ones (verdict r11 task #2).
-    val sc = nodes.sparkSession.sparkContext
-    sc.setJobDescription("ppr: nodeBase+delta0")
-    val nodeBase = nodes.select(col("id"),
+    lazy val nodeBase = nodes.select(col("id"),
       when(col("is_seed"), lit(base)).otherwise(lit(0L)).as("sb"),
       when(col("is_seed"), lit(scale)).otherwise(lit(0L)).as("r0"))
       .localCheckpoint(true)
-    var ranks = nodeBase.select(col("id"), col("r0").as("rank_scaled"))
+    // per-source contribution CHANGE, fanned out to neighbors via
+    // explode, summed map-side like the dense form's contribs; a source
+    // whose TRUNCATED contribution didn't move (dc = 0) sends nothing —
+    // dropping exact-zero terms from an integer sum is exact, and the
+    // truncating div makes such sources common late
+    def messages(delta: DataFrame): DataFrame = adj
+      .join(delta, adj("src") === delta("id"))
+      .select(col("nbrs"),
+        (expr(s"((new_r * 85) div 100) div pr_deg") -
+          expr(s"((old_r * 85) div 100) div pr_deg")).as("dc"))
+      .filter(col("dc") =!= 0L)
+      .select(explode(col("nbrs")).as("id"), col("dc"))
+      .groupBy("id").agg(sum("dc").as("dm"))
+      .filter(col("dm") =!= 0L)
+    // Δ₁ compares R₁ against R₀ (the one round where "received a nonzero
+    // delta" ≠ "changed": sb replaces R₀ rather than adding to it); lazy
+    // over the checkpointed R₁, consumed once by round 2's message join
+    def changedFromR0(r1: DataFrame): DataFrame = r1
+      .filter(col("rank_scaled") =!= col("r0"))
+      .select(col("id"), col("r0").as("old_r"), col("rank_scaled").as("new_r"))
+    // Iterate's state is the RANKS frame (round 1 keeps r0 for Δ₁). Each
+    // later round also checkpoints the message frame dm, whose count is
+    // the exit test; made the state, dm would move every ranks
+    // checkpoint into the following round or cost a job, so this round
+    // body keeps its own dm checkpoint and takes only its labels and its
+    // exit from Iterate.
+    var delta: DataFrame = null
+    var frontierEmpty = false
     // Δ₀ versus a virtual all-zero prior: f(0) = 0, so old_r = 0 makes
-    // round 1's delta sum equal the full Σ f(R₀) — only seeds qualify.
-    // EagerCount folds the emptiness check into the checkpoint job.
-    var (delta, deltaCnt) = org.apache.spark.sql.graft.EagerCount
-      .localCheckpointWithCount(nodeBase.filter(col("r0") =!= 0L)
-        .select(col("id"), lit(0L).as("old_r"), col("r0").as("new_r")))
-    var deltaEmpty = deltaCnt == 0L
-    var round = 1
-    while (round <= iters && !deltaEmpty) {
-      sc.setJobDescription(s"ppr: round $round")
-      // per-source contribution CHANGE, fanned out to neighbors via
-      // explode, summed map-side like the dense form's contribs; a
-      // source whose TRUNCATED contribution didn't move (dc = 0) sends
-      // nothing — dropping exact-zero terms from an integer sum is
-      // exact, and the truncating div makes such sources common late
-      val dm = adj
-        .join(delta, adj("src") === delta("id"))
-        .select(col("nbrs"),
-          (expr(s"((new_r * 85) div 100) div pr_deg") -
-            expr(s"((old_r * 85) div 100) div pr_deg")).as("dc"))
-        .filter(col("dc") =!= 0L)
-        .select(explode(col("nbrs")).as("id"), col("dc"))
-        .groupBy("id").agg(sum("dc").as("dm"))
-        .filter(col("dm") =!= 0L)
-      if (round == 1) {
-        // R₁ = sb + Σ f(R₀); Δ₁ compares against R₀ (the one round
-        // where "received a nonzero delta" ≠ "changed": sb replaces
-        // R₀ rather than adding to it)
-        val r1 = nodeBase
-          .join(dm, Seq("id"), "left")
+    // round 1's delta sum equal the full Σ f(R₀) — only seeds qualify;
+    // with no seed every round is the identity, and round 1 finds R₁ = R₀
+    val (ranks, _, _) = Iterate("ppr", nodeBase.filter(col("r0") =!= 0L)
+        .select(col("id"), lit(0L).as("old_r"), col("r0").as("new_r")),
+        iters) { (prev, round) =>
+      if (round == 1)
+        // R₁ = sb + Σ f(R₀), with r0 kept for Δ₁
+        nodeBase.join(messages(prev), Seq("id"), "left")
           .select(col("id"), col("r0"),
-            (col("sb") + coalesce(col("dm"), lit(0L)))
-              .as("rank_scaled"))
-          .localCheckpoint(true)
-        // delta stays LAZY over the checkpointed r1: it is consumed
-        // exactly once (next round's dm join) and its lineage is one
-        // filter over a materialized RDD — a separate checkpoint job
-        // bought nothing (round 13; values unchanged)
-        delta = r1.filter(col("rank_scaled") =!= col("r0"))
-          .select(col("id"), col("r0").as("old_r"),
-            col("rank_scaled").as("new_r"))
-        ranks = r1.select(col("id"), col("rank_scaled"))
-        deltaEmpty = delta.isEmpty
-      } else {
+            (col("sb") + coalesce(col("dm"), lit(0L))).as("rank_scaled"))
+      else {
+        val ranks =
+          if (round == 2) {
+            delta = changedFromR0(prev)
+            prev.select(col("id"), col("rank_scaled"))
+          } else prev
         // rounds ≥ 2: R_{t+1} − R_t = dm exactly, so the nonzero-dm
         // rows ARE the next delta — derived from the (small) dm frame
-        // joined back to ranks, never a full-frame compare.
-        // Checkpoint dm ONCE per round (round 12, guide §1/§5): it
-        // feeds BOTH the delta and the new ranks, so un-checkpointed
-        // the message join+explode+sum ran twice per round; and
-        // checkpoint ranks EVERY round, not every 4th — the profile
-        // showed the lazy 3-join ranks chain re-walking every prior
-        // round's dm when the 4th-round checkpoint finally forced it
-        // (round 4 cost 4.9 s of the query's 10.5 s). ranks is |V|
-        // rows of two longs — the materialization is noise; values
-        // are unchanged.
-        // EagerCount rides the dm checkpoint: |delta| == |dmC| exactly
-        // (inner join on ranks hits every dm id), so the emptiness
-        // check costs no extra job; delta itself stays LAZY — it is one
-        // broadcast join over two materialized RDDs, consumed once by
-        // the next round's dm join (round 13: the per-round delta
-        // checkpoint + isEmpty pair removed, values unchanged)
-        val (dmC, dmCnt) = org.apache.spark.sql.graft.EagerCount
-          .localCheckpointWithCount(dm)
+        // joined back to ranks, never a full-frame compare. dm is
+        // checkpointed once per round because it feeds both the delta
+        // and the new ranks (un-checkpointed, the message join ran
+        // twice), and ranks every round: a lazy 4-round ranks chain
+        // re-walked every prior dm (round 4 cost 4.9 s of 10.5 s).
+        // The count rides the dm checkpoint: |delta| == |dmC| exactly
+        // (the inner join on ranks hits every dm id); delta stays LAZY,
+        // one broadcast join consumed once by the next message join
+        val (dmC, dmCnt) = SqlBridge.localCheckpointWithCount(messages(delta))
+        frontierEmpty = dmCnt == 0L
         delta = dmC.join(ranks, Seq("id"))
           .select(col("id"), col("rank_scaled").as("old_r"),
             (col("rank_scaled") + col("dm")).as("new_r"))
-        ranks = ranks.join(dmC, Seq("id"), "left")
+        ranks.join(dmC, Seq("id"), "left")
           .select(col("id"),
             (col("rank_scaled") + coalesce(col("dm"), lit(0L)))
               .as("rank_scaled"))
-          .localCheckpoint(true)
-        deltaEmpty = dmCnt == 0L
       }
-      round += 1
+    } { r =>
+      // an empty frontier proves every later round is a no-op
+      if (r.round == 1) changedFromR0(r.next).isEmpty else frontierEmpty
     }
     adj.unpersist()
-    sc.setJobDescription(null)
-    ranks
+    ranks.select(col("id"), col("rank_scaled"))
   }
 
   /** q385 — PERSONALIZED PAGERANK over the part co-purchase graph,
@@ -1024,19 +1000,18 @@ object Graph {
       .distinct()
       .localCheckpoint(true)
     val nodes = t(s, dir, "nation").select(col("n_nationkey").as("id"))
-    var x = nodes.select(col("id"), lit(KatzCentScale).as("katz"))
-      .localCheckpoint(true)
-    for (_ <- 1 to KatzCentIters) {
+    val (x, _, _) = Iterate("katz",
+        nodes.select(col("id"), lit(KatzCentScale).as("katz"))
+          .localCheckpoint(true), KatzCentIters) { (x, _) =>
       val m = edges.join(x, edges("src") === x("id"))
         .groupBy(edges("dst").as("id2"))
         .agg(sum("katz").as("msum"))
-      x = x.select(col("id")).join(m, col("id") === col("id2"), "left")
+      x.select(col("id")).join(m, col("id") === col("id2"), "left")
         .select(col("id"),
           (lit(KatzCentScale) +
             coalesce(expr(s"msum div ${1L << KatzCentShift}"), lit(0L)))
             .as("katz"))
-        .localCheckpoint(true)
-    }
+    }()
     x.select(col("id"), col("katz").as("katz_scaled"))
   }
 

@@ -940,11 +940,11 @@ object Similarity {
       .limit(RerankPool)
       .select("vec_id", "ed", "nrm", "rel")
       .localCheckpoint(true)
-    var sel = pool.orderBy(col("rel").desc, col("vec_id")).limit(1)
-      .select(col("vec_id"), col("ed").as("sed"), col("nrm").as("snrm"),
-        lit(1L).as("pick"))
-      .localCheckpoint(true)
-    for (k <- 2 to MmrK) {
+    val (sel, _, _) = Iterate("mmr",
+        pool.orderBy(col("rel").desc, col("vec_id")).limit(1)
+          .select(col("vec_id"), col("ed").as("sed"),
+            col("nrm").as("snrm"), lit(1L).as("pick"))
+          .localCheckpoint(true), MmrK - 1) { (sel, round) =>
       val scored = pool
         .join(sel.select("vec_id"), Seq("vec_id"), "left_anti")
         .crossJoin(broadcast(sel.select("sed", "snrm")))
@@ -959,9 +959,9 @@ object Similarity {
         .select("vec_id")
         .join(pool, Seq("vec_id"))
         .select(col("vec_id"), col("ed").as("sed"),
-          col("nrm").as("snrm"), lit(k.toLong).as("pick"))
-      sel = sel.unionByName(next).localCheckpoint(true)
-    }
+          col("nrm").as("snrm"), lit(round + 1L).as("pick"))
+      sel.unionByName(next)
+    }()
     sel.select("vec_id", "pick")
   }
 
@@ -2471,18 +2471,15 @@ object Similarity {
     * optimize; the per-round checkpoint loop is the fast form. */
   private def powerIterate(row0: DataFrame): DataFrame = {
     val d = GramDims
-    var row = row0
-    for (_ <- 1 to PowerIters) {
-      row = row
+    Iterate("power", row0, PowerIters) { (row, _) =>
+      row
         .select(col("g"), expr(matvecExpr(d)).as("y"))
         .select(col("g"),
           expr(s"""transform(y, y_v ->
               CAST(CAST(y_v AS DECIMAL(38,0)) * $PowerScale
                    div array_max(transform(y, y_a -> abs(y_a)))
                  AS BIGINT))""").as("x"))
-        .localCheckpoint(true)
-    }
-    row
+    }()._1
   }
 
   /** The q351 oracle's iteration chain, shared with q450. Each x_k

@@ -1014,13 +1014,12 @@ object TextOps {
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("word").orderBy("pos")
-    var syms = wordfreq
-      .select(col("word"), col("freq"),
-        posexplode(expr("filter(split(word, ''), bp_c -> bp_c <> '')"))
-          .as(Seq("pos", "sym")))
-      .localCheckpoint(true)
-    var merges: DataFrame = null
-    for (r <- 1 to rounds) {
+    val merges = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    val (syms, _, _) = Iterate("bpe", wordfreq
+        .select(col("word"), col("freq"),
+          posexplode(expr("filter(split(word, ''), bp_c -> bp_c <> '')"))
+            .as(Seq("pos", "sym")))
+        .localCheckpoint(true), rounds) { (syms, r) =>
       val withNext = syms.withColumn("nxt", lead("sym", 1).over(w))
       val best = withNext
         .filter(col("nxt").isNotNull)
@@ -1029,7 +1028,7 @@ object TextOps {
         .orderBy(col("cnt").desc, col("sym"), col("nxt"))
         .limit(1)
         .select(col("sym").as("lhs"), col("nxt").as("rhs"), col("cnt"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // read by the fusion join and the merge table
       val cands = withNext
         .join(broadcast(best),
           col("sym") === col("lhs") && col("nxt") === col("rhs"))
@@ -1043,7 +1042,9 @@ object TextOps {
           Window.partitionBy("word", "runid").orderBy("pos")))
         .filter(col("rn") % 2 === 1)
         .select(col("word"), col("pos"))
-      val rewritten = withNext
+      merges += best.select(lit(r.toLong).as("step"),
+        col("lhs"), col("rhs"), col("cnt"))
+      withNext
         .join(kept.withColumn("is_kept", lit(1)),
           Seq("word", "pos"), "left")
         .join(
@@ -1057,12 +1058,8 @@ object TextOps {
         .withColumn("pos", row_number().over(
           Window.partitionBy("word").orderBy("opos")) - 1)
         .select("word", "freq", "pos", "sym")
-      syms = rewritten.localCheckpoint(true)
-      val round = best.select(lit(r.toLong).as("step"),
-        col("lhs"), col("rhs"), col("cnt"))
-      merges = if (merges == null) round else merges.unionByName(round)
-    }
-    (merges, syms)
+    }()
+    (merges.reduceOption(_ unionByName _).orNull, syms)
   }
 
   /** q137 — BPE MERGE TRAINING: the first $BpeRounds byte-pair-encoding

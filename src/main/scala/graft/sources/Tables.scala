@@ -105,7 +105,7 @@ object Tables {
     * lower-casing column names and re-asserting key non-nullability at
     * the relation (the JDBC-metadata inference of reference
     * README.md:480-493, re-applied over parquet — see
-    * [[org.apache.spark.sql.GraftSqlBridge.withNonNullableColumns]]).
+    * [[org.apache.spark.sql.graft.SqlBridge.withNonNullableColumns]]).
     * Nullability is applied to the bare relation FIRST so the rename /
     * timestamp projects built on top reference the non-nullable
     * attributes and propagate the flag to the final schema. */
@@ -261,7 +261,7 @@ object Tables {
   private[graft] def applyKeyNullability(
       name: String, df: DataFrame): DataFrame =
     keyColumns.get(name).fold(df) { keys =>
-      org.apache.spark.sql.GraftSqlBridge
+      org.apache.spark.sql.graft.SqlBridge
         .withNonNullableColumns(df, keys.toSet)
     }
 

@@ -1,10 +1,13 @@
 package graft
 
 import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, count, lit, udf}
-import org.apache.spark.sql.graft.EagerCount
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.SqlBridge
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
@@ -20,8 +23,26 @@ class BridgeSpec extends SparkSpec {
     "Dataset.localCheckpoint(eager) on the same frame") {
     val df = Tables.load(spark, sf1, "customer")
       .groupBy("c_nationkey").agg(count(lit(1)).as("n"))
-    val (ours, n) = EagerCount.localCheckpointWithCount(df)
-    val theirs = df.localCheckpoint(true)
+    // SQL executions named "localCheckpoint" that ran df's plan: one
+    // per checkpoint when both are tracked
+    val checkpoints = new AtomicInteger()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint" && (qe eq df.queryExecution))
+          checkpoints.incrementAndGet()
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val ((ours, n), theirs) = try {
+      val both = (SqlBridge.localCheckpointWithCount(df),
+        df.localCheckpoint(true))
+      eventually(timeout(10.seconds), interval(50.millis)) {
+        assert(checkpoints.get === 2, "a checkpoint ran untracked")
+      }
+      both
+    } finally spark.listenerManager.unregister(listener)
     def rows(d: org.apache.spark.sql.DataFrame) =
       d.collect().map(_.toSeq).sortBy(_.toString).toSeq
     assert(rows(ours) === rows(theirs))

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.UUID
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,4 +29,35 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf1: String = TestSpark.sf1
+
+  /** `body`'s result and the description of every Spark job it started,
+    * in start order. Jobs are told apart by a job group of their own, set
+    * without touching the job description; listener events arrive in
+    * order, so once a marker job is seen every earlier job has been too. */
+  def jobsOf[T](body: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${UUID.randomUUID()}"
+    val jobs = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(
+        (e.properties.getProperty("spark.jobGroup.id"),
+          e.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("spark.jobGroup.id", group)
+      val out = try body finally
+        sc.setLocalProperty("spark.jobGroup.id", s"$group-marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.asScala.exists(_._1 == s"$group-marker") &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(jobs.asScala.exists(_._1 == s"$group-marker"),
+        "the listener never saw the marker job")
+      (out, jobs.asScala.filter(_._1 == group).map(_._2).toSeq)
+    } finally {
+      sc.setLocalProperty("spark.jobGroup.id", null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -9,7 +9,6 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.{BINARY, DOUBLE, INT64}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -148,32 +147,11 @@ class TablesSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-nojob").toString
     Tables.names.foreach(n => Files.copy(
       Paths.get(s"$sf1/$n.parquet"), Paths.get(s"$dir/$n.parquet")))
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(String.valueOf(
-          e.properties.getProperty("spark.jobGroup.id")))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup("tables-load", "loads under test")
+    val (_, jobs) = jobsOf {
       Tables.names.foreach(n => Tables.load(spark, dir, n).schema)
       Tables.names.foreach(n => Tables.load(spark, dir, n).schema)
-      // listener events arrive in order: once the marker job is seen,
-      // every job the loads started has been seen too
-      sc.setJobGroup("tables-marker", "listener-bus marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("tables-marker") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      assert(groups.contains("tables-marker"))
-      assert(!groups.contains("tables-load"),
-        "a Tables.load ran a Spark job (schema inference?)")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
+    assert(jobs.isEmpty, "a Tables.load ran a Spark job (schema inference?)")
   }
 
   test("events.ts as parquet TIMESTAMP(NANOS) loads, and only that " +
