@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place a session is built. Every main (Bench, Verify, Profile,
-  * Explain, Scaling, GenData, PlanLedger) and the test session share these
+/** The one place a session is built. Every main (Bench, Verify, Explain,
+  * Scaling, GenData, PlanLedger) and the test session share these
   * settings: `local[cores]`, shuffle partitions = cores, UTC session time
   * zone, AQE on, no UI, log level WARN.
   *

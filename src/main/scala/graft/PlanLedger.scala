@@ -73,7 +73,7 @@ object PlanLedger {
     try fingerprint(
       SparkEntry.queries(name)(s, sfDir).queryExecution.executedPlan)
     catch { case e: Throwable =>
-      if (sys.env.contains("SPARK_GRAFT_PLANS_DEBUG")) e.printStackTrace()
+      System.err.println(s"[plans] $name failed: ${e.getMessage}")
       s"err:${e.getClass.getSimpleName}"
     }
 

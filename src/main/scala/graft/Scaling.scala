@@ -17,9 +17,9 @@ package graft
   * reading is ≈ pure overhead, slightly high) and fit the exponent on the
   * overhead-corrected span: e = log10((t(0.1)−ovh)/(t(0.01)−ovh)).
   * Over-estimating overhead deflates the denominator, so this errs toward
-  * FLAGGING — conservative in the right direction. Noise discipline
-  * follows Bench: per SF, two interleaved passes over the query list, min
-  * per query, cache teardown untimed.
+  * FLAGGING — conservative in the right direction. Each reading is one
+  * [[Bench.Meter]] measurement; per SF, two interleaved passes over the
+  * query list, min per query. A query that throws reads -1.
   *
   * Output: one JSON line per (query, sf) with the min time, then one line
   * per query with the fitted exponent, then a summary line. The committed
@@ -195,53 +195,32 @@ object Scaling {
     // answering the completes-at-all / order-of-magnitude question.
     val passes = sys.env.getOrElse("SPARK_GRAFT_SCALING_PASSES", "2").toInt
 
-    def materialize(name: String, sfDir: String): Double = {
-      val dt =
-        try {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir)
-            .write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-      spark.catalog.clearCache()
-      dt
-    }
+    val meter = new Bench.Meter(spark)
 
     // warmup on the smallest SF: JIT + parquet footer IO, untimed
-    names.headOption.foreach(materialize(_, sfDirs.head))
+    names.headOption.foreach(meter(_, sfDirs.head))
 
-    val outPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT", "scaling_full.jsonl"))
     // Flush each reading as it lands: an endurance run that dies at query
     // 400 of 503 should still leave 399 adjudicable rows on disk.
-    val out = java.nio.file.Files.newBufferedWriter(outPath)
+    val out = java.nio.file.Files.newBufferedWriter(java.nio.file.Paths.get(
+      sys.env.getOrElse("SPARK_GRAFT_SCALING_OUT", "scaling_full.jsonl")))
     def emit(line: String): Unit = {
       println(line); out.write(line); out.newLine(); out.flush()
     }
 
     // Per-reading rows go to the artifact too: a single-SF sweep (the
-    // full-suite sf10 endurance run) has no exponent rows, so without
-    // these the output file would be empty. Single-pass mode emits each
-    // reading AS IT LANDS (a JVM death at query 400 of 505 leaves 399
-    // adjudicable rows); min-of-2 mode can only emit after both passes.
-    val times: Map[(String, String), Double] = sfDirs.flatMap { sf =>
-      if (passes < 2) {
-        names.map { n =>
-          val t = materialize(n, sf)
-          emit(s"""{"query":"$n","sf":"$sf","sec":$t}""")
-          (n, sf) -> t
-        }
-      } else {
-        val p1 = names.map(n => n -> materialize(n, sf))
-        val p2 = names.map(n => n -> materialize(n, sf)).toMap
-        p1.map { case (n, a) =>
-          val b = p2(n)
-          val t = if (a < 0 || b < 0) math.max(a, b) else math.min(a, b)
-          emit(s"""{"query":"$n","sf":"$sf","sec":$t}""")
-          (n, sf) -> t
-        }
+    // full-suite sf10 endurance run) has no exponent rows. Each reading
+    // is emitted as its last pass lands; a failed pass (-1) never beats
+    // a measured one.
+    val times = collection.mutable.Map[(String, String), Double]()
+    for (sf <- sfDirs; pass <- 1 to math.max(passes, 1); n <- names) {
+      val t = meter(n, sf).sec
+      val best = times.get((n, sf)).fold(t) { p =>
+        if (p < 0 || t < 0) math.max(p, t) else math.min(p, t)
       }
-    }.toMap
+      times((n, sf)) = best
+      if (pass >= passes) emit(s"""{"query":"$n","sf":"$sf","sec":$best}""")
+    }
     names.foreach { n =>
       val ts = sfDirs.map(sf => times((n, sf)))
       if (ts.forall(_ >= 0) && ts.size >= 3) {
@@ -257,6 +236,8 @@ object Scaling {
       }
     }
     out.close()
+    System.err.println(s"[scaling] ${meter.failed.size} of ${names.size} " +
+      s"queries failed: ${meter.failed.mkString("[", ", ", "]")}")
     spark.stop()
   }
 }

@@ -32,8 +32,8 @@ abstract class SparkSpec extends AnyFunSuite {
 
   /** `body`'s result and the description of every Spark job it started,
     * in start order. Jobs are told apart by a job group of their own, set
-    * without touching the job description; listener events arrive in
-    * order, so once a marker job is seen every earlier job has been too. */
+    * without touching the job description; [[Bench.drain]] makes sure
+    * every job start has reached the listener before it is read. */
   def jobsOf[T](body: => T): (T, Seq[String]) = {
     val sc = spark.sparkContext
     val group = s"graft-jobs-${UUID.randomUUID()}"
@@ -46,18 +46,9 @@ abstract class SparkSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       sc.setLocalProperty("spark.jobGroup.id", group)
-      val out = try body finally
-        sc.setLocalProperty("spark.jobGroup.id", s"$group-marker")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!jobs.asScala.exists(_._1 == s"$group-marker") &&
-          System.nanoTime() < deadline) Thread.sleep(20)
-      assert(jobs.asScala.exists(_._1 == s"$group-marker"),
-        "the listener never saw the marker job")
+      val out = try body finally sc.setLocalProperty("spark.jobGroup.id", null)
+      Bench.drain(sc)
       (out, jobs.asScala.filter(_._1 == group).map(_._2).toSeq)
-    } finally {
-      sc.setLocalProperty("spark.jobGroup.id", null)
-      sc.removeSparkListener(listener)
-    }
+    } finally sc.removeSparkListener(listener)
   }
 }
