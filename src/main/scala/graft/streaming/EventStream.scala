@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, Trigger}
 import org.apache.spark.sql.types._
 
 /** Typed event row for stateful operators. */
@@ -45,9 +46,21 @@ case class FunnelPos(user_id: Long, stage: Long)
 case class RateCounts(
     user_id: Long, n_events: Long, n_allowed: Long, n_denied: Long)
 
-/** Structured Streaming over the events table (SURVEY.md §7 M6).
+/** Structured Streaming over the events and documents tables (SURVEY.md
+  * §7 M6): the 35 declared `*_stream_*` queries and the operators they
+  * share.
   *
-  * The aggregation function is ONE object shared with the batch q26 — the
+  * Every query replays its table through ONE runner. [[readStream]] opens
+  * the table as a file stream with the schema the source layer checked
+  * against its footers; [[drain]] runs a stream into the memory sink
+  * named after the run and returns the sink table; [[fold]] runs it
+  * through `foreachBatch` over an accumulator and returns the final
+  * value. Both run once with `Trigger.AvailableNow` under the run's name
+  * (so its micro-batch jobs carry that name), pin the session conf the
+  * run needs for exactly the run, and stop the query however the run
+  * ends.
+  *
+  * The windowed aggregation is ONE object shared with the batch q26 — the
   * parity test asserts batch(df) == stream(df) by running the same
   * transformation through both engines, which is Spark's unified-batch/
   * stream model doing exactly what it promises.
@@ -58,6 +71,68 @@ case class RateCounts(
   * 100 TB/day ingest needs to avoid unbounded state growth.
   */
 object EventStream {
+
+  /** Opens table `table` of an sf dir as a file stream. The schema is the
+    * one the source layer checked against the table's footers
+    * ([[graft.sources.Tables.readSchema]]), so a file that differs from
+    * the declaration fails here with `SourceSchemaMismatch` as a batch
+    * load does, and the `events.ts` encoding is normalized in one place
+    * for batch and stream reads alike. */
+  def readStream(spark: SparkSession, sfDir: String, table: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val rd = spark.readStream
+      .schema(graft.sources.Tables.readSchema(spark, sfDir, table))
+    maxFilesPerTrigger.foreach(n =>
+      rd.option("maxFilesPerTrigger", n.toString))
+    val raw = rd
+      // an sf table is a single parquet FILE: FileStreamSource injects
+      // basePath=<path> for non-glob paths and then rejects it for not
+      // being a directory, so address the file through a glob
+      .parquet(s"$sfDir/$table.parque[t]")
+    if (table == "events") graft.sources.Tables.normalizeEventTs(raw)
+    else raw
+  }
+
+  /** The one stream run: drops the view `name`, sets the `pinned` session
+    * conf, and replays `df` once into `sink` under the query name `name`
+    * with `Trigger.AvailableNow`. However the run ends, the query is
+    * stopped and each pinned key gets back the value it had, or is unset
+    * again if it had none. A failed run rethrows. */
+  private def run(name: String, pinned: Map[String, String], df: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val s = df.sparkSession
+    s.catalog.dropTempView(name) // idempotent across re-runs in a session
+    val before = s.conf.getAll
+    try {
+      pinned.foreach { case (k, v) => s.conf.set(k, v) }
+      val q = sink(df.writeStream).queryName(name)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+    } finally pinned.keys.foreach(k => before.get(k) match {
+      case Some(v) => s.conf.set(k, v)
+      case None => s.conf.unset(k)
+    })
+  }
+
+  /** Drains `df` into the memory sink `name` in output `mode` and returns
+    * the sink table. */
+  private[graft] def drain(name: String, mode: String,
+      pinned: Map[String, String] = Map.empty)(df: DataFrame): DataFrame = {
+    run(name, pinned, df)(_.outputMode(mode).format("memory"))
+    df.sparkSession.table(name)
+  }
+
+  /** Folds `step` over the micro-batches of `df`, starting from `init`,
+    * and returns the final accumulator. */
+  private[graft] def fold[A](name: String, init: A,
+      pinned: Map[String, String] = Map.empty)(df: DataFrame)(
+      step: (A, DataFrame) => A): A = {
+    var acc = init
+    run(name, pinned, df)(_.foreachBatch {
+      (batch: DataFrame, _: Long) => acc = step(acc, batch)
+    })
+    acc
+  }
 
   /** The shared batch/stream aggregation: 1-day tumbling windows per
     * event_type, count + DECIMAL-cast sum (same shape as q26). The sum is
@@ -75,25 +150,6 @@ object EventStream {
       .select(
         col("window.start").cast("date").as("day"),
         col("event_type"), col("n"), col("sum_value"))
-
-  /** Open the events table as a stream (file source over the sf dir).
-    * The raw schema is the `events` schema the source layer verified
-    * against the file's footer ([[graft.sources.Tables.readSchema]]), so
-    * the `ts` encoding (nanos-as-long vs micros TIMESTAMP_NTZ) is decided
-    * in one place for batch and stream reads alike. */
-  def readEvents(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val rd = spark.readStream
-      .schema(graft.sources.Tables.readSchema(spark, sfDir, "events"))
-    maxFilesPerTrigger.foreach(n =>
-      rd.option("maxFilesPerTrigger", n.toString))
-    val raw = rd
-      // the sf table is a single parquet FILE: FileStreamSource injects
-      // basePath=<path> for non-glob paths and then rejects it for not
-      // being a directory, so address the file through a glob
-      .parquet(s"$sfDir/events.parque[t]")
-    graft.sources.Tables.normalizeEventTs(raw)
-  }
 
   /** Project a raw events frame to the typed shape. */
   def typedEvents(df: DataFrame): Dataset[Event] = {
@@ -216,17 +272,10 @@ object EventStream {
   def q109StreamWindows(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q109_stream_windows_mem"
-    s.catalog.dropTempView(name) // idempotent across re-runs in a session
-    val q = windowedAgg(readEvents(s, dir, maxFilesPerTrigger).withWatermark("ts", "1 day"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q109_stream_windows_mem", "complete") {
+      windowedAgg(readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day"))
+    }
   }
 
   /** q114 — DECLARED custom streaming state: the events stream replayed
@@ -243,23 +292,20 @@ object EventStream {
   def q114StreamProfiles(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q114_stream_profiles_mem"
-    s.catalog.dropTempView(name)
-    val q = runningUserActivity(typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
-      .toDF()
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-      .groupBy("user_id")
-      .agg(org.apache.spark.sql.functions.max("n_events").as("n_events"),
-        org.apache.spark.sql.functions.max("n_purchases")
-          .as("n_purchases"))
+    finalProfiles(drain("q114_stream_profiles_mem", "update") {
+      runningUserActivity(typedEvents(
+        readStream(s, dir, "events", maxFilesPerTrigger))).toDF()
+    })
   }
+
+  /** The final per-user profile from an update-mode profile sink: the
+    * counters are monotone, so each user's max over the emitted rows is
+    * the last state, however many micro-batches the replay took (q114,
+    * q506). */
+  private def finalProfiles(sink: DataFrame): DataFrame =
+    sink.groupBy("user_id")
+      .agg(max("n_events").as("n_events"),
+        max("n_purchases").as("n_purchases"))
 
   /** Session gap for q117 (matches q41's 30-minute session_window). */
   val SessionGapSeconds = 1800L
@@ -280,20 +326,12 @@ object EventStream {
   def q117StreamSessions(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q117_stream_sessions_mem"
-    s.catalog.dropTempView(name)
     import s.implicits._
-    val q = sessionizeStateful(
-      typedEvents(readEvents(s, dir, maxFilesPerTrigger)), SessionGapSeconds)
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q117_stream_sessions_mem", "append") {
+      sessionizeStateful(typedEvents(
+        readStream(s, dir, "events", maxFilesPerTrigger)), SessionGapSeconds)
+        .toDF()
+    }
   }
 
   /** Attribution window for q121 (micros; = INTERVAL 1 HOUR). */
@@ -317,30 +355,19 @@ object EventStream {
   def q121StreamIntervalJoin(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q121_stream_interval_join_mem"
-    s.catalog.dropTempView(name)
     // a stream-stream join keeps FOUR state stores per shuffle
     // partition; at this replay size the run is store-commit bound, so
     // pin the stateful parallelism low for the (ephemeral-checkpoint)
-    // run and restore after the replay drains. Result is partitioning-
-    // invariant — only the fixed overhead changes.
-    val before = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val q = clickPurchaseJoin(readEvents(s, dir, maxFilesPerTrigger),
+    // run. Result is partitioning-invariant — only the fixed overhead
+    // changes.
+    drain("q121_stream_interval_join_mem", "append",
+        Map("spark.sql.shuffle.partitions" -> "8")) {
+      clickPurchaseJoin(readStream(s, dir, "events", maxFilesPerTrigger),
           "2 hours", "INTERVAL 1 HOUR")
         .select(col("click_id"), col("purchase_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
             .as("gap_us"))
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", before)
-    s.table(name)
+    }
   }
 
   /** q126 — streaming EXACT DEDUP as a declared query (the ingest-time
@@ -357,21 +384,14 @@ object EventStream {
   def q126StreamDedup(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q126_stream_dedup_mem"
-    s.catalog.dropTempView(name)
-    val doubled = readEvents(s, dir, maxFilesPerTrigger).unionByName(readEvents(s, dir, maxFilesPerTrigger))
-    val q = dedupStream(
-        doubled.select("event_id", "ts", "user_id", "event_type"),
-        "1 day")
-      .select(col("event_id"), col("user_id"), col("event_type"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    val doubled = readStream(s, dir, "events", maxFilesPerTrigger)
+      .unionByName(readStream(s, dir, "events", maxFilesPerTrigger))
+    drain("q126_stream_dedup_mem", "append") {
+      dedupStream(
+          doubled.select("event_id", "ts", "user_id", "event_type"),
+          "1 day")
+        .select(col("event_id"), col("user_id"), col("event_type"))
+    }
   }
 
   /** q140 — STREAM-STATIC enrichment join as a declared run, the fifth
@@ -389,25 +409,17 @@ object EventStream {
   def q140StreamEnrich(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q140_stream_enrich_mem"
-    s.catalog.dropTempView(name)
     val dim = graft.sources.Tables.load(s, dir, "customer")
       .select(col("c_custkey").as("user_id"),
         col("c_nationkey").cast("bigint").as("nation"))
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .join(broadcast(dim), "user_id")
-      .groupBy("nation")
-      .agg(count(lit(1)).as("n_events"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_purchases"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q140_stream_enrich_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .join(broadcast(dim), "user_id")
+        .groupBy("nation")
+        .agg(count(lit(1)).as("n_events"),
+          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+            .as("n_purchases"))
+    }
   }
 
   private def q140OracleSql: String =
@@ -460,27 +472,21 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    var snapshot = Seq.empty[(Long, Long, String, Long)]
-      .toDF("user_id", "k", "last_type", "n_upserts")
-    val q = readEvents(s, dir, maxFilesPerTrigger)
+    val upserts = readStream(s, dir, "events", maxFilesPerTrigger)
       .select(col("user_id"),
         (unix_timestamp(col("ts")) * UpsertKeyScale + col("event_id"))
           .as("k"),
         col("event_type").as("last_type"))
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+    fold("q146_stream_upsert", Seq.empty[(Long, Long, String, Long)]
+        .toDF("user_id", "k", "last_type", "n_upserts"))(upserts) {
+      (snapshot, batch) =>
         val delta = batch
           .groupBy("user_id")
           .agg(max_by(col("last_type"), col("k")).as("last_type"),
             max("k").as("k"), count(lit(1)).as("n_upserts"))
           .select("user_id", "k", "last_type", "n_upserts")
-        snapshot = mergeUpserts(snapshot, delta).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    snapshot
+        mergeUpserts(snapshot, delta).localCheckpoint(true)
+    }
   }
 
   private def q146OracleSql: String =
@@ -491,19 +497,6 @@ object EventStream {
                arg_max(event_type, k) AS last_type,
                CAST(count(*) AS BIGINT) AS n_upserts
         FROM e GROUP BY user_id"""
-
-  /** Streaming source over the documents table (plain types — no nanos
-    * conversion needed; same single-file glob trick as [[readEvents]]). */
-  def readDocs(spark: SparkSession, sfDir: String,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(
-      "doc_id BIGINT, text STRING, lang STRING, source STRING, " +
-        "n_chars BIGINT")
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.fold(reader)(m =>
-        reader.option("maxFilesPerTrigger", m.toString))
-      .parquet(s"$sfDir/documents.parque[t]")
-  }
 
   /** q157 — STREAMING INCREMENTAL NEAR-DUP via `foreachBatch` (the
     * eighth declared Structured Streaming shape, and q152's operator
@@ -528,40 +521,47 @@ object EventStream {
     * maintained continuously). */
   def q157StreamLsh(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
-      : org.apache.spark.sql.DataFrame = {
+      : org.apache.spark.sql.DataFrame =
+    incrementalLsh("q157_stream_lsh", s, dir, maxFilesPerTrigger)(identity)
+
+  /** The incremental LSH near-dup fold of q157 and q302, the
+    * continuous-ingest case of Continuously Adaptive Similarity Search
+    * (SIGMOD 2020, PAPERS.md): the planted-document replay, passed
+    * through `prepare` (q302 chunks it), drains batch by batch; each
+    * micro-batch is banded once, self-joined for in-batch pairs, joined
+    * against the accumulated band index for batch-vs-index pairs, and
+    * appended to the index. Returns the lifetime pair set. */
+  private def incrementalLsh(name: String, s: SparkSession, dir: String,
+      maxFilesPerTrigger: Option[Int])(
+      prepare: DataFrame => DataFrame): DataFrame = {
     import s.implicits._
     val D = graft.operators.Dedup
-    var index = Seq.empty[(Long, Int, String)]
-      .toDF("doc_id", "band", "bkey")
-    var pairs = Seq.empty[(Long, Long)].toDF("doc_id_1", "doc_id_2")
-    val docs = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
+    val docs = readStream(s, dir, "documents", maxFilesPerTrigger)
+      .select("doc_id", "text")
     val planted = docs.unionByName(docs.select(
       (col("doc_id") + D.PlantedOffset).as("doc_id"),
       expr("array_join(slice(split(text, ' '), 1, " +
         "size(split(text, ' ')) - 1), ' ')").as("text")))
-    val q = planted.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = D.bandedKeys(batch.toDF()).localCheckpoint(true)
-        val inBatch = b.as("x").join(b.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_id_1"),
-            col("y.doc_id").as("doc_id_2"))
-        val vsIndex = b.as("b").join(index.as("i"),
-            col("b.band") === col("i.band") &&
-              col("b.bkey") === col("i.bkey"))
-          .select(
-            least(col("b.doc_id"), col("i.doc_id")).as("doc_id_1"),
-            greatest(col("b.doc_id"), col("i.doc_id")).as("doc_id_2"))
-        pairs = pairs.unionByName(inBatch.unionByName(vsIndex))
-          .localCheckpoint(true)
-        index = index.unionByName(b).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val (pairs, _) = fold(name,
+        (Seq.empty[(Long, Long)].toDF("doc_id_1", "doc_id_2"),
+          Seq.empty[(Long, Int, String)].toDF("doc_id", "band", "bkey")))(
+        prepare(planted)) { case ((pairs, index), batch) =>
+      val b = D.bandedKeys(batch).localCheckpoint(true)
+      val inBatch = b.as("x").join(b.as("y"),
+          col("x.band") === col("y.band") &&
+            col("x.bkey") === col("y.bkey") &&
+            col("x.doc_id") < col("y.doc_id"))
+        .select(col("x.doc_id").as("doc_id_1"),
+          col("y.doc_id").as("doc_id_2"))
+      val vsIndex = b.as("b").join(index.as("i"),
+          col("b.band") === col("i.band") &&
+            col("b.bkey") === col("i.bkey"))
+        .select(
+          least(col("b.doc_id"), col("i.doc_id")).as("doc_id_1"),
+          greatest(col("b.doc_id"), col("i.doc_id")).as("doc_id_2"))
+      (pairs.unionByName(inBatch.unionByName(vsIndex)).localCheckpoint(true),
+        index.unionByName(b).localCheckpoint(true))
+    }
     pairs.distinct()
   }
 
@@ -588,41 +588,9 @@ object EventStream {
   def q302StreamChunkDedup(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    import s.implicits._
     val D = graft.operators.Dedup
-    var index = Seq.empty[(Long, Int, String)]
-      .toDF("doc_id", "band", "bkey")
-    var pairs = Seq.empty[(Long, Long)].toDF("doc_id_1", "doc_id_2")
-    val docs = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
-    val planted = docs.unionByName(docs.select(
-      (col("doc_id") + D.PlantedOffset).as("doc_id"),
-      expr("array_join(slice(split(text, ' '), 1, " +
-        "size(split(text, ' ')) - 1), ' ')").as("text")))
-    val chunks = D.chunkPseudoDocs(planted)
-    val q = chunks.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = D.bandedKeys(batch.toDF()).localCheckpoint(true)
-        val inBatch = b.as("x").join(b.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.bkey") === col("y.bkey") &&
-              col("x.doc_id") < col("y.doc_id"))
-          .select(col("x.doc_id").as("doc_id_1"),
-            col("y.doc_id").as("doc_id_2"))
-        val vsIndex = b.as("b").join(index.as("i"),
-            col("b.band") === col("i.band") &&
-              col("b.bkey") === col("i.bkey"))
-          .select(
-            least(col("b.doc_id"), col("i.doc_id")).as("doc_id_1"),
-            greatest(col("b.doc_id"), col("i.doc_id")).as("doc_id_2"))
-        pairs = pairs.unionByName(inBatch.unionByName(vsIndex))
-          .localCheckpoint(true)
-        index = index.unionByName(b).localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    D.chunkPairCensus(pairs.distinct())
+    D.chunkPairCensus(incrementalLsh("q302_stream_chunk_dedup", s, dir,
+      maxFilesPerTrigger)(D.chunkPseudoDocs))
   }
 
   /** q188 — the DECLARATIVE streaming sessionizer: `session_window`
@@ -647,24 +615,16 @@ object EventStream {
   def q188StreamSessionWindow(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q188_stream_session_window_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withColumn("ts_s", date_trunc("second", col("ts")))
-      .withWatermark("ts_s", "0 seconds")
-      .groupBy(session_window(col("ts_s"), "30 minutes"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"), max(col("ts_s")).as("session_end"))
-      .select(col("user_id"),
-        col("session_window.start").as("session_start"),
-        col("session_end"), col("n_events"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q188_stream_session_window_mem", "append") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withColumn("ts_s", date_trunc("second", col("ts")))
+        .withWatermark("ts_s", "0 seconds")
+        .groupBy(session_window(col("ts_s"), "30 minutes"), col("user_id"))
+        .agg(count(lit(1)).as("n_events"), max(col("ts_s")).as("session_end"))
+        .select(col("user_id"),
+          col("session_window.start").as("session_start"),
+          col("session_end"), col("n_events"))
+    }
   }
 
   /** q41's batch sessionization, filtered to the sessions append mode
@@ -718,26 +678,18 @@ object EventStream {
   def q236StreamKmv(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q236_stream_kmv_mem"
-    s.catalog.dropTempView(name)
     val kmv = udaf(new graft.functions.KmvMin(StreamKmvK),
       org.apache.spark.sql.Encoders.scalaLong)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .select(col("ts"), col("event_type"),
-        expr(s"(user_id * 1103515245 + 12345) % $StreamKmvM").as("hv"))
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(kmv(col("hv")).as("mins"))
-      .select(col("window.start").cast("date").as("day"),
-        col("event_type"), col("mins"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q236_stream_kmv_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .select(col("ts"), col("event_type"),
+          expr(s"(user_id * 1103515245 + 12345) % $StreamKmvM").as("hv"))
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(kmv(col("hv")).as("mins"))
+        .select(col("window.start").cast("date").as("day"),
+          col("event_type"), col("mins"))
+    }
       .select(col("day"), col("event_type"),
         size(col("mins")).cast("bigint").as("n_mins"),
         expr("element_at(mins, size(mins))").as("kth_hash"))
@@ -794,26 +746,18 @@ object EventStream {
   def q239StreamHeavyHitters(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q239_stream_hh_mem"
-    s.catalog.dropTempView(name)
     val mg = udaf(new graft.functions.MisraGries(StreamHhK),
       org.apache.spark.sql.Encoders.scalaLong)
     val keyExpr = "CASE WHEN user_id % 10 = 0 THEN -1 ELSE user_id END"
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .withColumn("k", expr(keyExpr))
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(mg(col("k")).as("cands"))
-      .select(col("window.start").cast("date").as("day"),
-        col("event_type"), col("cands"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val sketch = s.table(name)
+    val sketch = drain("q239_stream_hh_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .withColumn("k", expr(keyExpr))
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(mg(col("k")).as("cands"))
+        .select(col("window.start").cast("date").as("day"),
+          col("event_type"), col("cands"))
+    }
     val exact = graft.sources.Tables.load(s, dir, "events")
       .groupBy(col("ts").cast("date").as("day"), col("event_type"),
         expr(keyExpr).as("k"))
@@ -860,23 +804,16 @@ object EventStream {
   def q253StreamQuantile(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q253_stream_quantile_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .select(col("ts"), col("event_type"),
-        expr("CAST(floor(value) AS BIGINT)").as("bin"))
-      .groupBy(window(col("ts"), "1 day"), col("event_type"), col("bin"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("window.start").cast("date").as("day"),
-        col("event_type"), col("bin"), col("c"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q253_stream_quantile_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .select(col("ts"), col("event_type"),
+          expr("CAST(floor(value) AS BIGINT)").as("bin"))
+        .groupBy(window(col("ts"), "1 day"), col("event_type"), col("bin"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("window.start").cast("date").as("day"),
+          col("event_type"), col("bin"), col("c"))
+    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("day", "event_type").orderBy("bin")
       .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -884,7 +821,7 @@ object EventStream {
         .currentRow)
     val tot = org.apache.spark.sql.expressions.Window
       .partitionBy("day", "event_type")
-    s.table(name)
+    sink
       .withColumn("cum", sum("c").over(w))
       .withColumn("n", sum("c").over(tot))
       .groupBy("day", "event_type")
@@ -988,19 +925,12 @@ object EventStream {
   def q267StreamRateLimit(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q267_stream_rate_limit_mem"
-    s.catalog.dropTempView(name)
     import s.implicits._
-    val q = rateLimitStateful(typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
-      .toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q267_stream_rate_limit_mem", "append") {
+      rateLimitStateful(typedEvents(
+        readStream(s, dir, "events", maxFilesPerTrigger)))
+        .toDF()
+    }
       .groupBy("user_id")
       .agg(sum("n_events").as("n_events"),
         sum("n_allowed").as("n_allowed"),
@@ -1070,10 +1000,8 @@ object EventStream {
   def q283StreamFunnel(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q283_stream_funnel_mem"
-    s.catalog.dropTempView(name)
     import s.implicits._
-    val machine = typedEvents(readEvents(s, dir, maxFilesPerTrigger))
+    val machine = typedEvents(readStream(s, dir, "events", maxFilesPerTrigger))
       .map(e => (e.user_id, e.event_type,
         (e.ts.getTime / 1000) * 10000000L + e.event_id))
       .groupByKey(_._1)
@@ -1100,15 +1028,8 @@ object EventStream {
           state.update(st)
           Iterator(FunnelPos(uid, st.stage))
       }
-    val q = machine.toDF()
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).groupBy("user_id")
+    drain("q283_stream_funnel_mem", "append")(machine.toDF())
+      .groupBy("user_id")
       .agg(max("stage").as("stage"))
   }
 
@@ -1170,33 +1091,26 @@ object EventStream {
   def q313StreamPsi(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q313_stream_psi_mem"
-    s.catalog.dropTempView(name)
     val ladder = StreamPsiEdges.zipWithIndex
       .foldRight(lit(StreamPsiEdges.length + 1L)) {
         case ((edge, i), rest) =>
           when(col("vc") < edge, (i + 1).toLong).otherwise(rest)
       }
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .select(col("ts"),
-        expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
-      .withColumn("bin", ladder)
-      .groupBy(window(col("ts"), "1 day"), col("bin"))
-      .agg(count(lit(1)).as("k"))
-      .select(col("window.start").cast("date").as("day"),
-        col("bin"), col("k"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q313_stream_psi_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .select(col("ts"),
+          expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
+        .withColumn("bin", ladder)
+        .groupBy(window(col("ts"), "1 day"), col("bin"))
+        .agg(count(lit(1)).as("k"))
+        .select(col("window.start").cast("date").as("day"),
+          col("bin"), col("k"))
+    }
     // MemoryPlan is not a MultiInstanceRelation: the spine/ref self-joins
     // below would hit "conflicting references" — checkpoint the (tiny,
     // day×bin-bounded) census into a LogicalRDD first
-    val census = s.table(name).localCheckpoint(true)
+    val census = sink.localCheckpoint(true)
     val d0 = census.agg(min("day").as("d0"))
     val bins = s.range(1, StreamPsiEdges.length + 2L)
       .select(col("id").as("bin"))
@@ -1272,21 +1186,13 @@ object EventStream {
   def q336StreamCusum(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q336_stream_cusum_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").cast("date").as("d"), col("n"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val census = s.table(name).localCheckpoint(true)
+    val census = drain("q336_stream_cusum_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"))
+        .agg(count(lit(1)).as("n"))
+        .select(col("window.start").cast("date").as("d"), col("n"))
+    }.localCheckpoint(true)
     val w = org.apache.spark.sql.expressions.Window.orderBy("d")
     val seq = census
       .withColumn("i", row_number().over(w).cast("bigint"))
@@ -1336,21 +1242,13 @@ object EventStream {
   def q369StreamAcf(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q369_stream_acf_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("window.start").cast("date").as("day"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val daily = s.table(name).localCheckpoint(true)
+    val daily = drain("q369_stream_acf_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("window.start").cast("date").as("day"), col("x"))
+    }.localCheckpoint(true)
     val g = daily.agg(count(lit(1)).as("n"), sum("x").as("sx"))
     val y = daily.crossJoin(broadcast(g))
       .select(col("day"), (col("n") * col("x") - col("sx")).as("y"))
@@ -1409,28 +1307,21 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val A = graft.operators.Analytics
-    val name = "q388_stream_sprt_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(count(lit(1)).as("dn"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("dk"))
-      .select(col("window.start").cast("date").as("day"),
-        col("dn"), col("dk"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q388_stream_sprt_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"))
+        .agg(count(lit(1)).as("dn"),
+          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+            .as("dk"))
+        .select(col("window.start").cast("date").as("day"),
+          col("dn"), col("dk"))
+    }
     val w = org.apache.spark.sql.expressions.Window.orderBy("day")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    s.table(name).localCheckpoint(true)
+    sink.localCheckpoint(true)
       .withColumn("n", sum("dn").over(w))
       .withColumn("k", sum("dk").over(w))
       .withColumn("llr", expr(s"CAST(k AS DOUBLE) * ${A.sprtL1} " +
@@ -1464,26 +1355,19 @@ object EventStream {
   def q400StreamEwma(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q400_stream_ewma_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("window.start").cast("date").as("day"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q400_stream_ewma_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("window.start").cast("date").as("day"), col("x"))
+    }
     val ord = org.apache.spark.sql.expressions.Window.orderBy("day")
     val cum = org.apache.spark.sql.expressions.Window.orderBy("d")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    s.table(name).localCheckpoint(true)
+    sink.localCheckpoint(true)
       .withColumn("d", row_number().over(ord).cast("bigint"))
       .withColumn("wt", expr("""CASE WHEN d = 1
         THEN CAST(1 AS BIGINT)
@@ -1518,23 +1402,16 @@ object EventStream {
   def q412StreamHalving(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q412_stream_halving_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(sum(expr("CAST(floor(value * 100) AS BIGINT)")).as("c"))
-      .select(col("window.start").cast("date").as("day"),
-        col("event_type"), col("c"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q412_stream_halving_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(sum(expr("CAST(floor(value * 100) AS BIGINT)")).as("c"))
+        .select(col("window.start").cast("date").as("day"),
+          col("event_type"), col("c"))
+    }
     val W = org.apache.spark.sql.expressions.Window
-    val daily = s.table(name).localCheckpoint(true)
+    val daily = sink.localCheckpoint(true)
       .withColumn("d", dense_rank().over(W.orderBy("day"))
         .cast("bigint"))
     val arms = daily.groupBy("event_type")
@@ -1583,35 +1460,28 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     val St = graft.operators.Stats
-    val name = "q419_stream_pocock_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(
-        sum(when(col("user_id") % 2 === 1, 1L).otherwise(0L))
-          .as("dna"),
-        sum(when(col("user_id") % 2 === 1 &&
-          col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("dka"),
-        sum(when(col("user_id") % 2 === 1, 0L).otherwise(1L))
-          .as("dnb"),
-        sum(when(col("user_id") % 2 =!= 1 &&
-          col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("dkb"))
-      .select(col("window.start").cast("date").as("day"),
-        col("dna"), col("dka"), col("dnb"), col("dkb"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q419_stream_pocock_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"))
+        .agg(
+          sum(when(col("user_id") % 2 === 1, 1L).otherwise(0L))
+            .as("dna"),
+          sum(when(col("user_id") % 2 === 1 &&
+            col("event_type") === "purchase", 1L).otherwise(0L))
+            .as("dka"),
+          sum(when(col("user_id") % 2 === 1, 0L).otherwise(1L))
+            .as("dnb"),
+          sum(when(col("user_id") % 2 =!= 1 &&
+            col("event_type") === "purchase", 1L).otherwise(0L))
+            .as("dkb"))
+        .select(col("window.start").cast("date").as("day"),
+          col("dna"), col("dka"), col("dnb"), col("dkb"))
+    }
     val W = org.apache.spark.sql.expressions.Window
     val w = W.orderBy("day")
       .rowsBetween(W.unboundedPreceding, W.currentRow)
-    s.table(name).localCheckpoint(true)
+    sink.localCheckpoint(true)
       .withColumn("na", sum("dna").over(w))
       .withColumn("ka", sum("dka").over(w))
       .withColumn("nb", sum("dnb").over(w))
@@ -1653,22 +1523,16 @@ object EventStream {
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
     val T = graft.operators.TextOps
-    var counts = Seq.empty[(String, String, Long)]
-      .toDF("w1", "w2", "c12")
-    val q = readDocs(s, dir, maxFilesPerTrigger).select("text")
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val bc = T.adjacentBigramsOf(batch.toDF())
+    val counts = fold("q347_stream_spectrum",
+        Seq.empty[(String, String, Long)].toDF("w1", "w2", "c12"))(
+        readStream(s, dir, "documents", maxFilesPerTrigger).select("text")) {
+      (counts, batch) =>
+        val bc = T.adjacentBigramsOf(batch)
           .groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-        counts = counts.unionByName(bc)
+        counts.unionByName(bc)
           .groupBy("w1", "w2").agg(sum("c12").as("c12"))
           .localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     T.goodTuringSpectrum(counts)
   }
 
@@ -1703,35 +1567,30 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    var firstB = Seq.empty[(String, Long)].toDF("g", "fb")
-    var tokc = Seq.empty[(Long, Long)].toDF("b", "n_toks")
-    val q = readDocs(s, dir, maxFilesPerTrigger).select("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-          _: Long) =>
-        val toks = batch.toDF()
-          .select(expr(s"doc_id div $GrowthBucketDocs").as("b"),
-            split(col("text"), " ").as("ws"))
-          .localCheckpoint(true)
-        val bf = toks.filter(size(col("ws")) >= 3)
-          .select(col("b"), explode(expr(
-            """transform(sequence(1, size(ws) - 2),
-               i -> concat_ws(' ', element_at(ws, i),
-                 element_at(ws, i + 1), element_at(ws, i + 2)))"""))
-            .as("g"))
-          .groupBy("g").agg(min("b").as("fb"))
-        firstB = firstB.unionByName(bf)
-          .groupBy("g").agg(min("fb").as("fb")).localCheckpoint(true)
-        val bt = toks.groupBy("b")
-          .agg(sum(size(col("ws")).cast("bigint")).as("n_toks"))
-        tokc = tokc.unionByName(bt)
+    val (firstB, tokc) = fold("q353_stream_vocab_growth",
+        (Seq.empty[(String, Long)].toDF("g", "fb"),
+          Seq.empty[(Long, Long)].toDF("b", "n_toks")))(
+        readStream(s, dir, "documents", maxFilesPerTrigger)
+          .select("doc_id", "text")) { case ((firstB, tokc), batch) =>
+      val toks = batch
+        .select(expr(s"doc_id div $GrowthBucketDocs").as("b"),
+          split(col("text"), " ").as("ws"))
+        .localCheckpoint(true)
+      val bf = toks.filter(size(col("ws")) >= 3)
+        .select(col("b"), explode(expr(
+          """transform(sequence(1, size(ws) - 2),
+             i -> concat_ws(' ', element_at(ws, i),
+               element_at(ws, i + 1), element_at(ws, i + 2)))"""))
+          .as("g"))
+        .groupBy("g").agg(min("b").as("fb"))
+      val bt = toks.groupBy("b")
+        .agg(sum(size(col("ws")).cast("bigint")).as("n_toks"))
+      (firstB.unionByName(bf)
+          .groupBy("g").agg(min("fb").as("fb")).localCheckpoint(true),
+        tokc.unionByName(bt)
           .groupBy("b").agg(sum("n_toks").as("n_toks"))
-          .localCheckpoint(true)
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          .localCheckpoint(true))
+    }
     val w = org.apache.spark.sql.expressions.Window.orderBy("b")
       .rowsBetween(org.apache.spark.sql.expressions.Window
         .unboundedPreceding,
@@ -1791,21 +1650,13 @@ object EventStream {
   def q442StreamPeriodogram(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q442_stream_periodogram_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("window.start").cast("date").as("day"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val phased = s.table(name).localCheckpoint(true)
+    val phased = drain("q442_stream_periodogram_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("window.start").cast("date").as("day"), col("x"))
+    }.localCheckpoint(true)
       .select(col("x"),
         expr("datediff(day, DATE '2024-01-01') % 7").as("m"))
     val aggs = (1 to 3).flatMap { k => Seq(
@@ -1866,21 +1717,13 @@ object EventStream {
   def q451StreamDispersion(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q451_stream_dispersion_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("event_type"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).localCheckpoint(true)
+    drain("q451_stream_dispersion_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("event_type"), col("x"))
+    }.localCheckpoint(true)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))
@@ -1924,25 +1767,18 @@ object EventStream {
   def q458StreamSpc(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q458_stream_spc_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("window.start").cast("date").as("day"),
-        hour(col("window.start")).as("hr"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q458_stream_spc_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 hour"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("window.start").cast("date").as("day"),
+          hour(col("window.start")).as("hr"), col("x"))
+    }
     // zero-fill the 24-hour spine per observed day: an hour with no
     // events is a real 0-count subgroup member, and at small SFs
     // requiring 24 OBSERVED hours would empty the chart entirely
-    val census = s.table(name).localCheckpoint(true)
+    val census = sink.localCheckpoint(true)
     val spine = census.select("day").distinct()
       .crossJoin(s.range(24).select(col("id").cast("int").as("hr")))
     val daily = spine.join(census, Seq("day", "hr"), "left")
@@ -2011,21 +1847,13 @@ object EventStream {
   def q467StreamUserSkew(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q467_stream_user_skew_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"), col("user_id"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("user_id"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name).localCheckpoint(true)
+    drain("q467_stream_user_skew_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"), col("user_id"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("user_id"), col("x"))
+    }.localCheckpoint(true)
       .groupBy("user_id").agg(sum("x").as("c"))
       .agg(sum("c").as("n"), count(lit(1)).as("ndv"),
         max("c").as("max_cnt"))
@@ -2067,25 +1895,18 @@ object EventStream {
   def q484StreamNegbin(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q484_stream_negbin_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("x"))
-      .select(col("event_type"), col("x"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val sink = drain("q484_stream_negbin_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .withWatermark("ts", "1 day")
+        .groupBy(window(col("ts"), "1 day"), col("event_type"))
+        .agg(count(lit(1)).as("x"))
+        .select(col("event_type"), col("x"))
+    }
     val mean = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
     val vr = """((CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE)
       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
       / (CAST(n AS DOUBLE) - 1.0))"""
-    s.table(name).localCheckpoint(true)
+    sink.localCheckpoint(true)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), sum("x").as("sx"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"))
@@ -2116,19 +1937,11 @@ object EventStream {
   def q491StreamCoverage(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q491_stream_coverage_mem"
-    s.catalog.dropTempView(name)
-    val q = readDocs(s, dir, maxFilesPerTrigger)
-      .groupBy("lang", "source")
-      .agg(count(lit(1)).as("c"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val census = s.table(name).localCheckpoint(true)
+    val census = drain("q491_stream_coverage_mem", "complete") {
+      readStream(s, dir, "documents", maxFilesPerTrigger)
+        .groupBy("lang", "source")
+        .agg(count(lit(1)).as("c"))
+    }.localCheckpoint(true)
     val langs = census.select("lang").distinct()
     val sources = census.select("source").distinct()
     val spine = langs.crossJoin(sources)
@@ -2164,25 +1977,17 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.Curation
-    val name = "q500_stream_hll_mem"
-    s.catalog.dropTempView(name)
-    val q = readEvents(s, dir, maxFilesPerTrigger)
-      .selectExpr("event_type",
-        s"(${Curation.HllA} * user_id + ${Curation.HllB}) " +
-          s"% ${Curation.HllP} AS hll_h")
-      .selectExpr("event_type", "hll_h % 64 AS hll_reg",
-        "hll_h div 64 AS hll_v")
-      .withColumn("rho", expr(Curation.hllRhoCase))
-      .groupBy("event_type", "hll_reg")
-      .agg(max("rho").as("m"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
+    drain("q500_stream_hll_mem", "complete") {
+      readStream(s, dir, "events", maxFilesPerTrigger)
+        .selectExpr("event_type",
+          s"(${Curation.HllA} * user_id + ${Curation.HllB}) " +
+            s"% ${Curation.HllP} AS hll_h")
+        .selectExpr("event_type", "hll_h % 64 AS hll_reg",
+          "hll_h div 64 AS hll_v")
+        .withColumn("rho", expr(Curation.hllRhoCase))
+        .groupBy("event_type", "hll_reg")
+        .agg(max("rho").as("m"))
+    }
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_regs"),
         sum(expr("shiftleft(CAST(1 AS BIGINT), 25 - m)")).as("s_occ"))
@@ -2276,6 +2081,10 @@ object EventStream {
     "org.apache.spark.sql.execution.streaming.state." +
       "RocksDBStateStoreProvider"
 
+  /** The session conf a `transformWithState` run pins for itself. */
+  private val RocksDbPinned: Map[String, String] =
+    Map("spark.sql.streaming.stateStore.providerClass" -> RocksDbProvider)
+
   /** q506 — the `transformWithState` ARBITRARY-STATE API as the 32nd
     * declared streaming shape: q114's per-user profile ported to
     * Spark 4's StatefulProcessor (successor to mapGroupsWithState —
@@ -2290,31 +2099,11 @@ object EventStream {
   def q506StreamProfilesTws(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q506_stream_profiles_tws_mem"
-    s.catalog.dropTempView(name)
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(confKey)
-    s.conf.set(confKey, RocksDbProvider)
-    try {
-      val q = runningUserActivityTws(
-        typedEvents(readEvents(s, dir, maxFilesPerTrigger)))
-        .toDF()
-        .writeStream
-        .outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set(confKey, v)
-      case None => s.conf.unset(confKey)
-    }
-    s.table(name)
-      .groupBy("user_id")
-      .agg(org.apache.spark.sql.functions.max("n_events").as("n_events"),
-        org.apache.spark.sql.functions.max("n_purchases")
-          .as("n_purchases"))
+    finalProfiles(
+      drain("q506_stream_profiles_tws_mem", "update", RocksDbPinned) {
+        runningUserActivityTws(typedEvents(
+          readStream(s, dir, "events", maxFilesPerTrigger))).toDF()
+      })
   }
 
   // -------------------------------------------------------------- q514
@@ -2423,28 +2212,12 @@ object EventStream {
   def q514StreamTimerSessions(s: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
-    val name = "q514_stream_timer_sessions_mem"
-    s.catalog.dropTempView(name)
-    val confKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(confKey)
-    s.conf.set(confKey, RocksDbProvider)
-    try {
-      val q = sessionizeWithTimers(
-        typedEvents(readEvents(s, dir, maxFilesPerTrigger)
+    drain("q514_stream_timer_sessions_mem", "append", RocksDbPinned) {
+      sessionizeWithTimers(
+        typedEvents(readStream(s, dir, "events", maxFilesPerTrigger)
           .withWatermark("ts", "0 seconds")), SessionGapSeconds)
         .toDF()
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally prev match {
-      case Some(v) => s.conf.set(confKey, v)
-      case None => s.conf.unset(confKey)
     }
-    s.table(name)
   }
 
   // -------------------------------------------------------------- q517
@@ -2466,18 +2239,10 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.Curation
-    val name = "q517_stream_dsir_ratios_mem"
-    s.catalog.dropTempView(name)
-    val q = Curation.dsirCensus(
-        Curation.dsirTokenBuckets(readDocs(s, dir, maxFilesPerTrigger)))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Curation.dsirRatios(s.table(name))
+    Curation.dsirRatios(drain("q517_stream_dsir_ratios_mem", "complete") {
+      Curation.dsirCensus(Curation.dsirTokenBuckets(
+        readStream(s, dir, "documents", maxFilesPerTrigger)))
+    })
   }
 
   // -------------------------------------------------------------- q505
@@ -2497,17 +2262,10 @@ object EventStream {
       maxFilesPerTrigger: Option[Int] = None)
       : org.apache.spark.sql.DataFrame = {
     import graft.operators.Curation
-    val name = "q505_stream_split_gain_mem"
-    s.catalog.dropTempView(name)
-    val q = Curation.splitGainStats(readDocs(s, dir, maxFilesPerTrigger))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(name)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    Curation.splitGainFinish(s.table(name))
+    Curation.splitGainFinish(drain("q505_stream_split_gain_mem", "complete") {
+      Curation.splitGainStats(
+        readStream(s, dir, "documents", maxFilesPerTrigger))
+    })
   }
 
   val queries: Map[String, (SparkSession, String)
@@ -2688,17 +2446,4 @@ object EventStream {
             AND p.pus >= c.cus AND p.pus <= c.cus + $AttributionUs""",
     "q126_stream_dedup" ->
       """SELECT event_id, user_id, event_type FROM events""")
-
-  /** Start the windowed aggregation into an in-memory sink (complete mode:
-    * every window stays queryable — right for tests; production would use
-    * append mode + watermark into a parquet/Kafka sink). */
-  def start(spark: SparkSession, sfDir: String, queryName: String)
-      : StreamingQuery =
-    windowedAgg(
-      readEvents(spark, sfDir).withWatermark("ts", "1 day"))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start()
 }

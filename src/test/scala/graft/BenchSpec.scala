@@ -24,6 +24,13 @@ class BenchSpec extends SparkSpec {
     assert(r.jobs.map(_._1).contains("Par.checkpointAll"), r.jobs)
   }
 
+  test("q146: the jobs of its foreachBatch fold carry the run's name") {
+    val r = meter("q146_stream_upsert", sf1)
+    assert(r.sec > 0)
+    assert(r.jobs.exists(_._1.startsWith("q146_stream_upsert")), r.jobs)
+    assert(!r.jobs.exists(_._1.startsWith("\nid = ")), r.jobs)
+  }
+
   test("a query that throws reads -1, is named in failed, and leaves no " +
     "tag behind") {
     val missing = java.nio.file.Files.createTempDirectory("graft-no-tables")

@@ -9,11 +9,7 @@ import graft.streaming.EventStream
 class StreamingSpec extends SparkSpec {
 
   test("streaming windowed aggregation equals batch q26") {
-    val q = EventStream.start(spark, sf1, "events_stream_test")
-    try q.processAllAvailable()
-    finally q.stop()
-    val streamed = spark.sql(
-      "SELECT day, event_type, n, sum_value FROM events_stream_test")
+    val streamed = EventStream.q109StreamWindows(spark, sf1)
     val batch = Extensions.q26EventWindows(spark, sf1)
     assert(streamed.count() === batch.count())
     assert(streamed.exceptAll(batch).count() === 0L)
@@ -21,8 +17,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("watermark bounds state: query plan carries the watermark") {
-    val agg = EventStream.windowedAgg(
-      EventStream.readEvents(spark, sf1).withWatermark("ts", "1 day"))
+    val agg = EventStream.windowedAgg(EventStream
+      .readStream(spark, sf1, "events").withWatermark("ts", "1 day"))
     assert(agg.isStreaming)
     val plan = agg.queryExecution.logical.toString
     assert(plan.contains("EventTimeWatermark"), plan.take(800))

@@ -189,8 +189,8 @@ class TablesSpec extends SparkSpec {
     assert(events.schema("ts").dataType === TimestampType)
     assert(events.head().getAs[java.sql.Timestamp]("ts").toInstant ===
       java.time.Instant.parse("2024-01-15T10:30:00.123456Z"))
-    assert(EventStream.readEvents(spark, dir).schema("ts").dataType ===
-      TimestampType)
+    assert(EventStream.readStream(spark, dir, "events").schema("ts")
+      .dataType === TimestampType)
   }
 
   test("customer schema keeps int64 custkey") {
